@@ -1,0 +1,12 @@
+package perfbench
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** JSON rendering for the harness's result and trace files, with the
+  * Jackson Scala module Spark already ships. */
+object Json {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  def write(v: Any): String = mapper.writeValueAsString(v)
+}
