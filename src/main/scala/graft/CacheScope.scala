@@ -79,7 +79,13 @@ object CacheScope {
   def trackCheckpoint(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
     val reliable = ss.conf.get("spark.graft.checkpoint.reliable", "false")
-      .toBoolean && ss.sparkContext.getCheckpointDir.isDefined
+      .toBoolean
+    // a deployment that asked for durable checkpoints must not get
+    // non-replicated local blocks instead
+    if (reliable && ss.sparkContext.getCheckpointDir.isEmpty)
+      throw new IllegalStateException(
+        "spark.graft.checkpoint.reliable=true needs a checkpoint dir: " +
+          "call SparkContext.setCheckpointDir first")
     if (reliable) df.checkpoint(true)
     else {
       val c = df.localCheckpoint(true)

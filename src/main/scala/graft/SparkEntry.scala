@@ -23,20 +23,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     all("groupby_agg").build(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2: what the
+    * oracle checks (a gated query's verdict over its build). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (name, qd) => name -> qd.build }
+    all.map { case (name, qd) => name -> qd.checked _ }
 
-  /** Bench-time builds: identical to `queries` except where a gate
-    * oracle computes an exact verdict alongside the operator — there
-    * the bench override times the operator alone (sketch family). */
+  /** The builds alone — what the benchmark times. Equal to `queries`
+    * except for gated queries, whose gate wraps this same build. */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (name, qd) => name -> qd.benchBuild.getOrElse(qd.build) }
+    all.map { case (name, qd) => name -> qd.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     * Resolved lazily (thunks) — call AFTER running the builds so
-    * build-recorded state (signature-table paths) is current. */
+    * artifact paths resolve against the dataset they were built for. */
   def oracleSql: Map[String, String] =
     all.collect { case (name, qd) if qd.oracle.isDefined =>
       name -> qd.oracle.get }

@@ -19,6 +19,9 @@ object Verify {
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // query -> first line of its build's exception, written beside
+    // oracle_sql.json: a query missing from the dump says why
+    val failures = scala.collection.mutable.TreeMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -26,7 +29,10 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          val msg = s"${e.getClass.getName}: ${e.getMessage}"
+            .linesIterator.nextOption().getOrElse("")
+          failures(name) = msg
+          System.err.println(s"[verify] $name failed: $msg")
         }
       }
     }
@@ -43,11 +49,11 @@ object Verify {
       case c => c.toString
     } + "\""
     // declare which dataset's artifacts oracle thunks must resolve
-    // (split_by_cluster's label table is memoized per dataset)
     graft.queries.OracleDataset.set(sfDir)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), obj(failures))
     spark.stop()
   }
 }

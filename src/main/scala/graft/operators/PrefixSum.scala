@@ -32,7 +32,7 @@ import org.apache.spark.sql.types._
   * know that the stamp column IS the partitioning — it inserted a
   * hash exchange for the window, AQE coalesced the tiny shuffle into
   * ONE task, and the whole query ran as 12 jobs (measured with
-  * JobPeek: half the wall time was inter-stage scheduling barriers).
+  * a job trace: half the wall time was inter-stage scheduling barriers).
   * Per-partition running state is the textbook genuine
   * `mapPartitions` case; this form runs 3 jobs and shuffles nothing
   * after the range partitioning. At 1e8+ groups nothing serializes:

@@ -47,6 +47,11 @@ object AnnQueries {
     (q, rows.filter(_.getLong(0) != 0L).map(_.getSeq[Double](1).toArray))
   }
 
+  /** ann_batch_ivf's query table: the ten vectors with vec_id < 10. */
+  private def batchQueries(e: org.apache.spark.sql.DataFrame) =
+    e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
   private[queries] def corpusWithQuery(e: org.apache.spark.sql.DataFrame) = {
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
@@ -81,12 +86,6 @@ object AnnQueries {
       |  AND ${QueryDef.cosSql("e.embedding", "q.embedding")} >= 0.2
       |ORDER BY e.vec_id""".stripMargin
 
-  // kmeans_step's handshake: the persisted START centroids the
-  // oracle replays one full distributed Lloyd step from
-  private val kmeansCentPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_kmeans_cents_default")
-
   /** One distributed Lloyd refinement step from `centers`: codegen'd
     * nearest-centroid assignment + micro-int quantized per-(cell,dim)
     * means. Values quantize to integer MICROS before aggregation so
@@ -113,118 +112,68 @@ object AnnQueries {
       .transform(QueryDef.sortSmall(_, col("cell"), col("dim")))
   }
 
-  // cluster_assign's centroid handshake (oracle replays the argmin
-  // from the persisted quantizer) + memoized bench codebook
-  private val clusterCentPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_cluster_cents_default")
-  private def clusterCentPath(d: String): String =
-    Fixtures.tmpPath("graft_cluster_cents", d)
-  // sample_diverse's persisted-quantizer handshake (cluster_assign's
-  // protocol, own artifact so the query is self-contained)
-  private val diverseCentPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_diverse_cents_default")
-  private def diverseCentPath(d: String): String =
-    Fixtures.tmpPath("graft_diverse_cents", d)
-  private val clusterBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
-  private def clusterBenchCenters(s: org.apache.spark.sql.SparkSession,
+  /** The 8-cell k-means quantizer over the whole corpus (trained on
+    * the id-ordered head sample), persisted as (cell, centroid) so
+    * oracles replay the argmin from the same doubles the plan carries
+    * as a literal. cluster_assign, sample_diverse and kmeans_step all
+    * read it: the quantizer is an ingest-maintained artifact, the
+    * queries time the assignment pass. */
+  private def kmeans8Centers(s: org.apache.spark.sql.SparkSession,
       d: String): Array[Array[Double]] =
-    clusterBenchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("kmeans8_cents", d) { p =>
       val e = Tables.embeddings(s, d)
       val (_, sample) = headSample(e, 65536)
-      graft.ann.Ivf.buildFromSample(e, "embedding", nCells = 8, sample)._2
-    })
-  // sample_diverse's bench codebook: read the query's OWN persisted
-  // quantizer (the diverseCentPath artifact the gated build writes)
-  // rather than borrowing cluster_assign's memo — the two geometries
-  // are incidentally identical today, and a future change to
-  // cluster_assign must not silently diverge this bench from the
-  // gated build. Falls back to training the same quantizer when the
-  // artifact hasn't been written in this JVM (bench-only runs).
-  private val diverseBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
-  private def diverseBenchCenters(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[Array[Double]] =
-    diverseBenchMemo.computeIfAbsent(d, _ => {
-      val p = diverseCentPath(d)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) {
-        s.read.parquet(p).select("cell", "centroid").orderBy("cell")
-          .collect().map(_.getSeq[Double](1).toArray)
-      } else {
-        val e = Tables.embeddings(s, d)
-        val (_, sample) = headSample(e, 65536)
-        graft.ann.Ivf.buildFromSample(e, "embedding", nCells = 8, sample)._2
-      }
-    })
+      val centers = Ivf.buildFromSample(e, "embedding", nCells = 8, sample)._2
+      import s.implicits._
+      centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(p)
+      centers
+    }
 
-  private val ivfRadiusBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
-  private def ivfRadiusBenchFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    ivfRadiusBenchMemo.computeIfAbsent(d, _ => {
+  /** A cell-partitioned at-rest IVF layout of the corpus rows passing
+    * `keep` (√N cells, head-sample trained) with its per-cell angular
+    * radii, plus the query vector: (path, centers, radii, q). */
+  private def radiusIndex(s: org.apache.spark.sql.SparkSession, d: String,
+      name: String, keep: org.apache.spark.sql.Column)
+      : (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
+    Artifacts.get(name, d) { p =>
       val e = Tables.embeddings(s, d)
       val (q, sample) = headSample(e, 65536)
-      val corpus = e.filter(col("vec_id") =!= 0)
-      val (indexed, centers) = Ivf.buildFromSample(corpus, "embedding",
+      val (indexed, centers) = Ivf.buildFromSample(e.filter(keep), "embedding",
         nCells = batchIvfCells(sample.length), sample)
       val idx = graft.CacheScope.track(indexed)
       val radii = Ivf.cellRadii(idx, centers, "embedding")
-      val p = Fixtures.tmpPath("graft_ivfradius_bench", d)
       idx.write.mode("overwrite").partitionBy("cell").parquet(p)
       (p, centers, radii, q)
-    })
+    }
 
-  // ann_delta_search's bench-path artifacts: the cell-partitioned
-  // BASE corpus (vectors indexed at rest) + quantizer + radii — the
-  // main-index half of the index+delta layout; the delta segment is
-  // never part of the artifact (that is the point)
-  private val ivfDeltaBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
-  private def ivfDeltaBenchFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    ivfDeltaBenchMemo.computeIfAbsent(d, _ => {
-      val e = Tables.embeddings(s, d)
-      val (q, sample) = headSample(e, 65536)
-      val base = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) =!= 4)
-      val (indexed, centers) = Ivf.buildFromSample(base, "embedding",
-        nCells = batchIvfCells(sample.length), sample)
-      val idx = graft.CacheScope.track(indexed)
-      val radii = Ivf.cellRadii(idx, centers, "embedding")
-      val p = Fixtures.tmpPath("graft_ivfdelta_bench", d)
-      idx.write.mode("overwrite").partitionBy("cell").parquet(p)
-      (p, centers, radii, q)
-    })
+  // ann_delta_search's main index: every vector except the delta
+  // segment (vec_id ≡ 4 mod 5, "arrived after the index was built")
+  private val deltaBase =
+    col("vec_id") =!= 0 && pmod(col("vec_id"), lit(5)) =!= 4
+  private val deltaSegment =
+    col("vec_id") =!= 0 && pmod(col("vec_id"), lit(5)) === 4
 
   // ann_stream_search's artifacts: the LSM story driven END TO END by
   // the REAL streaming runtime — base indexed at rest, the delta
   // arriving as file-source micro-batches through
   // VectorStreams.ingest (one Ivf.compact append per batch, commit
   // markers making replay idempotent), radii merged from the delta
-  // alone. Built once per (JVM, dataset) — ingest is an artifact
-  // event, search is the steady-state query. No driver collect
-  // anywhere: the arrival simulation writes the delta as two parquet
-  // files and streams them with maxFilesPerTrigger=1.
-  private val streamSearchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Map[Int, Double], Seq[Double])]()
+  // alone. Ingest is an artifact event, search is the steady-state
+  // query. No driver collect anywhere: the arrival simulation writes
+  // the delta as two parquet files and streams them with
+  // maxFilesPerTrigger=1.
   private def streamSearchFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Array[Array[Double]], Map[Int, Double], Seq[Double]) =
-    streamSearchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("ivf_stream_ingest", d) { tmp =>
       val e = Tables.embeddings(s, d)
       val (q, sample) = headSample(e, 65536)
-      val base = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) =!= 4)
-      val delta = e.filter(col("vec_id") =!= 0 &&
-        pmod(col("vec_id"), lit(5)) === 4)
-      val (indexed, centers) = Ivf.buildFromSample(base, "embedding",
-        nCells = batchIvfCells(sample.length), sample)
+      val delta = e.filter(deltaSegment)
+      val (indexed, centers) = Ivf.buildFromSample(e.filter(deltaBase),
+        "embedding", nCells = batchIvfCells(sample.length), sample)
       val idx = graft.CacheScope.track(indexed)
       val radii = Ivf.cellRadii(idx, centers, "embedding")
-      val tmp = Fixtures.tmpPath("graft_streamsearch", d)
       val path = tmp + "/idx"
       idx.write.mode("overwrite").partitionBy("cell").parquet(path)
       // arrival simulation: two files → two micro-batches
@@ -240,78 +189,61 @@ object AnnQueries {
         graft.streaming.VectorStreams.cellAssign(delta, centers),
         centers, "embedding", radii)
       (path, centers, merged, q)
-    })
+    }
 
-  // ann_ivfpq's bench-path index, built ONCE per (JVM, dataset) and
-  // persisted cell-partitioned (the at-rest IVFADC layout): production
-  // maintains codebooks + code table as index artifacts beside the
-  // vectors — retraining them per query execution measured the ingest
-  // pipeline, not the probe. Same pattern as embcosBenchCells. The
-  // Verify path keeps the full build + recall gate.
-  // ann_ivf / ann_pq steady-state artifacts, same argument: the cell
-  // assignment (resp. code table) and its codebook are maintained at
-  // ingest, not retrained per query
-  private val ivfBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]], Seq[Double])]()
-  private def ivfBenchFor(s: org.apache.spark.sql.SparkSession,
+  // ann_ivf / ann_pq / ann_ivfpq / ann_batch_ivf index artifacts: the
+  // cell assignment (resp. code table) is persisted cell-partitioned
+  // (the at-rest IVF/IVFADC layout) beside its codebook — production
+  // maintains both at ingest, so the queries time the probe, never
+  // the index training
+  private def ivf16For(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Array[Array[Double]], Seq[Double]) =
-    ivfBenchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("ivf16", d) { p =>
       val e = Tables.embeddings(s, d)
       val (q, sample) = headSample(e, 65536)
       val (indexed, centers) = Ivf.buildFromSample(
         e.filter(col("vec_id") =!= 0), "embedding", nCells = 16, sample)
-      val p = Fixtures.tmpPath("graft_ivf_bench", d)
       indexed.write.mode("overwrite").partitionBy("cell").parquet(p)
       (p, centers, q)
-    })
+    }
 
-  // ann_batch_ivf's steady-state artifact: quantizer + the
-  // cell-partitioned >=10 corpus (its split differs from ann_ivf's)
-  private val ivfBatchBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]])]()
-  private def ivfBatchBenchFor(s: org.apache.spark.sql.SparkSession,
+  // ann_batch_ivf's corpus is vec_id >= 10 (ids below are the queries)
+  private def ivfBatchFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Array[Array[Double]]) =
-    ivfBatchBenchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("ivf_sqrtn_batch", d) { p =>
       val e = Tables.embeddings(s, d)
       val (_, sample) = headSample(e, 65536)
       val (indexed, centers) = Ivf.buildFromSample(
         e.filter(col("vec_id") >= 10), "embedding",
         nCells = batchIvfCells(sample.length), sample)
-      val p = Fixtures.tmpPath("graft_ivfbatch_bench", d)
       indexed.write.mode("overwrite").partitionBy("cell").parquet(p)
       (p, centers)
-    })
+    }
 
-  private val pqBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.ann.Pq.Codebooks, Seq[Double])]()
-  private def pqBenchFor(s: org.apache.spark.sql.SparkSession,
+  private def pqFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, graft.ann.Pq.Codebooks, Seq[Double]) =
-    pqBenchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("pq_m8k256", d) { p =>
       val e = Tables.embeddings(s, d)
       val (q, sample) = headSample(e, 2048)
       val corpus = e.filter(col("vec_id") =!= 0)
       val cb = Pq.trainFromSample(sample, m = 8, k = 256)
-      val p = Fixtures.tmpPath("graft_pq_bench", d)
       Pq.encode(corpus, "vec_id", "embedding", cb).toDF()
         .write.mode("overwrite").parquet(p)
       (p, cb, q)
-    })
+    }
 
-  private val ivfpqBenchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.ann.IvfPq.Index, Seq[Double])]()
-  private def ivfpqBenchFor(s: org.apache.spark.sql.SparkSession,
+  private def ivfpqFor(s: org.apache.spark.sql.SparkSession,
       d: String): (String, graft.ann.IvfPq.Index, Seq[Double]) =
-    ivfpqBenchMemo.computeIfAbsent(d, _ => {
+    Artifacts.get("ivfpq_c16m8k16", d) { p =>
       val e = Tables.embeddings(s, d)
       val (q, sample) = headSample(e, 65536)
       val corpus = e.filter(col("vec_id") =!= 0)
       val (codes, index) = graft.ann.IvfPq.build(corpus,
         "vec_id", "embedding", nCells = 16, m = 8, k = 16,
         coarseSample = sample)
-      val p = Fixtures.tmpPath("graft_ivfpq_bench", d)
       codes.toDF().write.mode("overwrite").partitionBy("cell").parquet(p)
       (p, index, q)
-    })
+    }
 
   def defs: Map[String, QueryDef] = Map(
     // --- exact cosine top-k vs query vector (TakeOrderedAndProject) ---
@@ -437,31 +369,26 @@ object AnnQueries {
 
     // --- first-class corpus clustering (diversity bucketing /
     // SemDeDup-style partitioning as a PRODUCT, not an internal):
-    // k-means assignment over the whole embedding corpus. The build
-    // persists the trained quantizer; the oracle REPLAYS the
-    // squared-L2 argmin per vector from those centroids alone
-    // (identical left-to-right double arithmetic, ties to the lowest
-    // cell — NearestCentroid.compute's exact contract), so the
-    // distributed codegen'd assignment pass is hash-gated against an
-    // independent recomputation, never against its own output. ---
-    "cluster_assign" -> QueryDef.sqlBench(
+    // k-means assignment over the whole embedding corpus — one
+    // codegen'd map-side argmin pass with the quantizer artifact as a
+    // plan literal. The oracle REPLAYS the squared-L2 argmin per
+    // vector from the persisted centroids alone (identical
+    // left-to-right double arithmetic, ties to the lowest cell —
+    // NearestCentroid.compute's exact contract), so the distributed
+    // assignment pass is hash-gated against an independent
+    // recomputation, never against its own output. ---
+    "cluster_assign" -> QueryDef.sql(
       (s, d) => {
-        val pc = clusterCentPath(d)
-        clusterCentPathRef.set(pc)
-        val e = Tables.embeddings(s, d)
-        val (_, sample) = headSample(e, 65536)
-        val (indexed, centers) = Ivf.buildFromSample(e, "embedding",
-          nCells = 8, sample)
-        import s.implicits._
-        centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(pc)
-        indexed.select(col("vec_id"), col("cell").as("cluster"))
+        val centLit = typedLit(kmeans8Centers(s, d).map(_.toSeq).toSeq)
+        Tables.embeddings(s, d)
+          .select(col("vec_id"),
+            call_function("graft_nearest_centroid",
+              col("embedding"), centLit).as("cluster"))
           .orderBy("vec_id")
       },
       s"""WITH cents AS (
         |  SELECT cell, centroid
-        |  FROM read_parquet('${clusterCentPathRef.get}/*.parquet')
+        |  FROM read_parquet('${Artifacts.path("kmeans8_cents")}/*.parquet')
         |), d AS (
         |  SELECT e.vec_id, c.cell,
         |    list_sum(list_transform(range(1, 65),
@@ -473,19 +400,7 @@ object AnnQueries {
         |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rk
         |  FROM d)
         |SELECT vec_id, CAST(cell AS INTEGER) AS cluster
-        |FROM r WHERE rk = 1 ORDER BY vec_id""".stripMargin,
-      // bench: the steady-state shape — one codegen'd map-side
-      // assignment pass with the memoized codebook (the quantizer is
-      // an ingest-maintained artifact)
-      (s, d) => {
-        val centers = clusterBenchCenters(s, d)
-        val centLit = typedLit(centers.map(_.toSeq).toSeq)
-        Tables.embeddings(s, d)
-          .select(col("vec_id"),
-            call_function("graft_nearest_centroid",
-              col("embedding"), centLit).as("cluster"))
-          .orderBy("vec_id")
-      }),
+        |FROM r WHERE rk = 1 ORDER BY vec_id""".stripMargin),
 
     // --- cluster-balanced DIVERSITY sampling (semantic subset
     // selection: k docs per embedding cluster, so the sample spans
@@ -495,24 +410,17 @@ object AnnQueries {
     // within each cluster (sample_mix's fate discipline — stable
     // under re-runs, partitioning, corpus growth), top-3 per cluster
     // via GroupTopK's two-phase reduction (no per-cluster one-task
-    // window). The build persists the trained quantizer; the oracle
-    // REPLAYS assignment (exact argmin from the persisted centroids,
-    // cluster_assign's protocol) + the same fate ranking. Scale:
+    // window). Assignment is cluster_assign's pass over the shared
+    // quantizer artifact; the oracle REPLAYS assignment (exact argmin
+    // from the persisted centroids) + the same fate ranking. Scale:
     // assignment is one codegen'd map pass, fate map-side, output
     // bounded at cells × k. ---
-    "sample_diverse" -> QueryDef.sqlBench(
+    "sample_diverse" -> QueryDef.sql(
       (s, d) => {
-        val pc = diverseCentPath(d)
-        diverseCentPathRef.set(pc)
-        val e = Tables.embeddings(s, d)
-        val (_, sample) = headSample(e, 65536)
-        val (indexed, centers) = Ivf.buildFromSample(e, "embedding",
-          nCells = 8, sample)
-        import s.implicits._
-        centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(pc)
-        val fated = indexed.select(col("vec_id"), col("cell"),
+        val centLit = typedLit(kmeans8Centers(s, d).map(_.toSeq).toSeq)
+        val fated = Tables.embeddings(s, d).select(col("vec_id"),
+          call_function("graft_nearest_centroid",
+            col("embedding"), centLit).as("cell"),
           md5(col("vec_id").cast("string")).as("fate"))
         graft.operators.GroupTopK.topK(fated, Seq("cell"),
             Seq(col("fate"), col("vec_id")), 3)
@@ -521,7 +429,7 @@ object AnnQueries {
       },
       s"""WITH cents AS (
         |  SELECT cell, centroid
-        |  FROM read_parquet('${diverseCentPathRef.get}/*.parquet')
+        |  FROM read_parquet('${Artifacts.path("kmeans8_cents")}/*.parquet')
         |), d AS (
         |  SELECT e.vec_id, c.cell,
         |    list_sum(list_transform(range(1, 65),
@@ -542,22 +450,7 @@ object AnnQueries {
         |  FROM asg
         |)
         |SELECT vec_id, cluster, rk FROM t WHERE rk <= 3
-        |ORDER BY cluster, rk""".stripMargin,
-      // bench: the steady-state pass with sample_diverse's OWN
-      // memoized quantizer (the persisted diverseCentPath artifact) —
-      // one codegen'd assignment + fate + two-phase top-k
-      (s, d) => {
-        val centers = diverseBenchCenters(s, d)
-        val centLit = typedLit(centers.map(_.toSeq).toSeq)
-        val fated = Tables.embeddings(s, d).select(col("vec_id"),
-          call_function("graft_nearest_centroid",
-            col("embedding"), centLit).as("cell"),
-          md5(col("vec_id").cast("string")).as("fate"))
-        graft.operators.GroupTopK.topK(fated, Seq("cell"),
-            Seq(col("fate"), col("vec_id")), 3)
-          .select(col("vec_id"), col("cell").as("cluster"), col("rk"))
-          .orderBy("cluster", "rk")
-      }),
+        |ORDER BY cluster, rk""".stripMargin),
 
     // --- EXACT radius search through LOSSLESS IVF pruning: per-cell
     // angular radii (an O(cells) index statistic) + the triangle
@@ -570,31 +463,19 @@ object AnnQueries {
     // scan; the prune rate grows with corpus clusteredness (real
     // embedding corpora cluster; uniform-random test vectors prune
     // little, which the bound is honest about). ---
-    "ann_radius_ivf" -> QueryDef.sqlBench(
+    "ann_radius_ivf" -> QueryDef.sql(
+      // probe the cell-partitioned corpus artifact: the quantizer +
+      // radii pick the cells, the scan is partition-pruned
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val (q, sample) = headSample(e, 65536)
-        val corpus = e.filter(col("vec_id") =!= 0)
-        val (indexed, centers) = Ivf.buildFromSample(corpus, "embedding",
-          nCells = batchIvfCells(sample.length), sample)
-        // radii aggregate + pruned scan share one assignment pass
-        val idx = graft.CacheScope.track(indexed)
-        val radii = Ivf.cellRadii(idx, centers, "embedding")
-        Ivf.radiusSearch(idx, centers, radii, "vec_id", "embedding", q,
-            minCos = 0.2)
-          .orderBy("vec_id")
-      },
-      radiusOracleSql,
-      // bench: probe the persisted cell-partitioned corpus with the
-      // memoized quantizer + radii — the steady-state pruned scan
-      (s, d) => {
-        val (p, centers, radii, q) = ivfRadiusBenchFor(s, d)
+        val (p, centers, radii, q) =
+          radiusIndex(s, d, "ivf_sqrtn_radii", col("vec_id") =!= 0)
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
-        graft.ann.Ann.radiusSearch(
+        Ann.radiusSearch(
           s.read.parquet(p)
             .filter(col("cell").isin(probes.map(Integer.valueOf): _*)),
           "vec_id", "embedding", typedLit(q), minCos = 0.2)
-      }),
+      },
+      radiusOracleSql),
 
     // --- index + DELTA-SEGMENT search (the LSM shape every vector
     // store runs: a cell-partitioned main index plus an un-indexed
@@ -608,41 +489,23 @@ object AnnQueries {
     // the pruned base scan is partition-pruned file groups; the delta
     // scan is proportional to the delta, which compaction keeps
     // small. ---
-    "ann_delta_search" -> QueryDef.sqlBench(
+    "ann_delta_search" -> QueryDef.sql(
+      // probe the cell-partitioned BASE artifact + brute-scan the
+      // delta (quantizer geometry is free for exactness — pruning is
+      // lossless for ANY centers)
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val (q, sample) = headSample(e, 65536)
-        val base = e.filter(col("vec_id") =!= 0 &&
-          pmod(col("vec_id"), lit(5)) =!= 4)
-        val delta = e.filter(col("vec_id") =!= 0 &&
-          pmod(col("vec_id"), lit(5)) === 4)
-        // quantizer geometry is free for exactness (pruning is
-        // lossless for ANY centers) — share headSample's one job
-        val (indexed, centers) = Ivf.buildFromSample(base, "embedding",
-          nCells = batchIvfCells(sample.length), sample)
-        val idx = graft.CacheScope.track(indexed)
-        val radii = Ivf.cellRadii(idx, centers, "embedding")
-        Ivf.radiusSearch(idx, centers, radii, "vec_id", "embedding", q,
-            minCos = 0.2)
-          .unionByName(Ann.radiusSearch(delta, "vec_id", "embedding",
-            typedLit(q), minCos = 0.2))
-          .orderBy("vec_id")
-      },
-      radiusOracleSql,
-      // bench: probe the PERSISTED cell-partitioned base + brute-scan
-      // the delta — the steady-state index+delta query
-      (s, d) => {
-        val (p, centers, radii, q) = ivfDeltaBenchFor(s, d)
+        val (p, centers, radii, q) =
+          radiusIndex(s, d, "ivf_sqrtn_radii_base4of5", deltaBase)
         val probes = Ivf.radiusProbeCells(centers, radii, q, minCos = 0.2)
-        val delta = Tables.embeddings(s, d).filter(col("vec_id") =!= 0 &&
-          pmod(col("vec_id"), lit(5)) === 4)
+        val delta = Tables.embeddings(s, d).filter(deltaSegment)
         Ann.radiusSearch(
             s.read.parquet(p)
               .filter(col("cell").isin(probes.map(Integer.valueOf): _*)),
             "vec_id", "embedding", typedLit(q), minCos = 0.2)
           .unionByName(Ann.radiusSearch(delta, "vec_id", "embedding",
             typedLit(q), minCos = 0.2))
-      }),
+      },
+      radiusOracleSql),
 
     // --- search AFTER STREAMED ingest (the freshness contract of the
     // LSM vector store, driver-verified end to end): the delta
@@ -655,7 +518,7 @@ object AnnQueries {
     // duplicated, or mis-celled fails the hash). ann_delta_search
     // proves the un-folded-tail shape; this row proves
     // ingest-then-search. Ingest is a once-per-dataset artifact
-    // event (memoized); the measured query is the steady-state
+    // event; the measured query is the steady-state
     // partition-pruned scan. ---
     "ann_stream_search" -> QueryDef.sql(
       (s, d) => {
@@ -669,24 +532,17 @@ object AnnQueries {
     // --- IVF ANN: k-means coarse quantizer (fixed seed), probe the 4
     // nearest of 16 cells, exact re-rank — recall-verdict oracled
     // (spec additionally pins exhaustive-probe == brute force) ---
-    "ann_ivf" -> QueryDef.sqlBench(
+    "ann_ivf" -> QueryDef.gated(
+      // probe the cell-partitioned assignment artifact (pruned scan +
+      // exact re-rank)
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val (q, sample) = headSample(e, 65536)
-        val (indexed, centers) = Ivf.buildFromSample(
-          e.filter(col("vec_id") =!= 0), "embedding", nCells = 16, sample)
-        recallVerdict(
-          Ivf.topK(indexed, centers, "vec_id", "embedding", q, k = 10, nProbe = 6),
-          corpusWithQuery(e), minHits = 3)
-      },
-      ORACLE_RECALL,
-      // bench: probe the persisted cell-partitioned assignment with
-      // memoized centers — steady-state IVF (pruned scan + re-rank)
-      (s, d) => {
-        val (p, centers, q) = ivfBenchFor(s, d)
+        val (p, centers, q) = ivf16For(s, d)
         Ivf.topK(s.read.parquet(p), centers, "vec_id", "embedding",
           q, k = 10, nProbe = 6)
-      }),
+      },
+      ORACLE_RECALL,
+      (s, d, ann) => recallVerdict(ann,
+        corpusWithQuery(Tables.embeddings(s, d)), minHits = 3)),
 
     // --- product quantization: 8×256 codebooks (the standard 8-bit
     // PQ — 32x compression at 8 bytes/code), ADC code scan →
@@ -695,55 +551,32 @@ object AnnQueries {
     // scale-FRAGILE: 8/10 recall at sf0.01 collapsed to 2/10 at
     // sf0.1; 8-bit codebooks hold 10/10 and 9/10 at the same
     // refine ---
-    "ann_pq" -> QueryDef.sqlBench(
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val (q, sample) = headSample(e, 2048)
-        val corpus = e.filter(col("vec_id") =!= 0)
-        val cb = Pq.trainFromSample(sample, m = 8, k = 256)
-        val codes = Pq.encode(corpus, "vec_id", "embedding", cb)
-        recallVerdict(
-          Pq.topK(codes, corpus, cb, "vec_id", "embedding", q,
-            k = 10, refine = 100),
-          corpusWithQuery(e), minHits = 5)
-      },
-      ORACLE_RECALL,
-      // bench: ADC-scan the persisted code table with memoized
-      // codebooks — steady-state PQ (code scan + refine re-rank)
+    "ann_pq" -> QueryDef.gated(
+      // ADC-scan the persisted code table with the codebook artifact
+      // (code scan + refine re-rank)
       (s, d) => {
         import s.implicits._
-        val (p, cb, q) = pqBenchFor(s, d)
+        val (p, cb, q) = pqFor(s, d)
         val corpus = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
         Pq.topK(s.read.parquet(p).as[graft.ann.Pq.Code], corpus, cb,
           "vec_id", "embedding", q, k = 10, refine = 100)
-      }),
+      },
+      ORACLE_RECALL,
+      (s, d, ann) => recallVerdict(ann,
+        corpusWithQuery(Tables.embeddings(s, d)), minHits = 5)),
 
     // --- IVF-PQ composite (IVFADC): coarse cells prune the scan,
     // residual-PQ codes compress it, exact re-rank on refine
     // survivors — recall-verdict oracled (PqSpec pins
     // exhaustive==bruteforce) ---
-    "ann_ivfpq" -> QueryDef.sqlBench(
-      (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val (q, sample) = headSample(e, 65536)
-        val corpus = e.filter(col("vec_id") =!= 0)
-        val (codes, index) = graft.ann.IvfPq.build(corpus,
-          "vec_id", "embedding", nCells = 16, m = 8, k = 16,
-          coarseSample = sample)
-        recallVerdict(
-          graft.ann.IvfPq.topK(codes, index, corpus, "vec_id", "embedding",
-            q, kTop = 10, nProbe = 6, refine = 150),
-          corpusWithQuery(e), minHits = 3)
-      },
-      ORACLE_RECALL,
-      // bench path: probe the PERSISTED cell-partitioned code table
-      // with the memoized codebooks — the steady-state IVFADC query
-      // (partition-pruned scan + ADC + refine re-rank), not the
-      // index build. Column-predicate pre-prune BEFORE the typed
-      // filter so parquet partition pruning fires.
+    "ann_ivfpq" -> QueryDef.gated(
+      // probe the PERSISTED cell-partitioned code table with the
+      // codebook artifact (partition-pruned scan + ADC + refine
+      // re-rank). Column-predicate pre-prune BEFORE the typed filter
+      // so parquet partition pruning fires.
       (s, d) => {
         import s.implicits._
-        val (p, index, q) = ivfpqBenchFor(s, d)
+        val (p, index, q) = ivfpqFor(s, d)
         val probes = graft.ann.IvfPq.probeCells(index, q, nProbe = 6)
         val codes = s.read.parquet(p)
           .filter(col("cell").isin(probes.map(Int.box): _*))
@@ -751,7 +584,10 @@ object AnnQueries {
         val corpus = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
         graft.ann.IvfPq.topK(codes, index, corpus, "vec_id", "embedding",
           q, kTop = 10, nProbe = 6, refine = 150)
-      }),
+      },
+      ORACLE_RECALL,
+      (s, d, ann) => recallVerdict(ann,
+        corpusWithQuery(Tables.embeddings(s, d)), minHits = 3)),
 
     // --- batched exact top-k: MANY query vectors at once — the
     // similarity-JOIN shape real retrieval/dedup pipelines run (one
@@ -803,19 +639,21 @@ object AnnQueries {
     // pruned scan when the corpus is cell-partitioned at rest.
     // Recall-verdict oracled per query against the in-engine exact
     // batch top-k (itself DuckDB-validated via ann_batch). ---
-    "ann_batch_ivf" -> QueryDef.sqlBench(
+    "ann_batch_ivf" -> QueryDef.gated(
+      // probe the persisted cell-partitioned corpus with the quantizer
+      // artifact (the query table is re-read per execution: it is the
+      // live input)
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val corpus = e.filter(col("vec_id") >= 10)
-        val (_, sample) = headSample(e, 65536)
-        val (indexed, centers) = Ivf.buildFromSample(
-          corpus, "embedding", nCells = batchIvfCells(sample.length), sample)
-        val ann = Ivf.batchTopK(indexed, centers, "vec_id", "embedding",
-          queries, "q_id", "q_emb", k = 3,
+        val (p, centers) = ivfBatchFor(s, d)
+        Ivf.batchTopK(s.read.parquet(p), centers, "vec_id", "embedding",
+          batchQueries(Tables.embeddings(s, d)), "q_id", "q_emb", k = 3,
           nProbe = batchIvfProbe(centers.length))
-        val exactScored = corpus.crossJoin(broadcast(queries))
+      },
+      "SELECT CAST(10 AS BIGINT) AS n_queries, TRUE AS recall_ok",
+      (s, d, ann) => {
+        val e = Tables.embeddings(s, d)
+        val exactScored = e.filter(col("vec_id") >= 10)
+          .crossJoin(broadcast(batchQueries(e)))
           .withColumn("cos", graft.functions.VectorOps.roundAt(
             graft.functions.VectorOps.cosineFast(
               col("embedding"), col("q_emb")), 6))
@@ -836,18 +674,6 @@ object AnnQueries {
           .agg(count(lit(1)).as("n_queries"), sum(col("hits")).as("tot"))
           .select(col("n_queries").cast("long").as("n_queries"),
             (col("n_queries") === 10 && col("tot") >= 18).as("recall_ok"))
-      },
-      "SELECT CAST(10 AS BIGINT) AS n_queries, TRUE AS recall_ok",
-      // bench: steady-state batch probe — memoized quantizer +
-      // persisted cell-partitioned corpus, no exact-recall gate (the
-      // query table is re-read per execution: it is the live input)
-      (s, d) => {
-        val (p, centers) = ivfBatchBenchFor(s, d)
-        val queries = Tables.embeddings(s, d).filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        Ivf.batchTopK(s.read.parquet(p), centers, "vec_id", "embedding",
-          queries, "q_id", "q_emb", k = 3,
-          nProbe = batchIvfProbe(centers.length))
       }),
 
     // --- one DISTRIBUTED Lloyd k-means refinement step (the
@@ -861,20 +687,11 @@ object AnnQueries {
     // cells × 64) partial sums, never vectors. Oracle replays the
     // whole step (argmin + exact integer means) from the persisted
     // start centroids. ---
-    "kmeans_step" -> QueryDef.sqlBench(
-      (s, d) => {
-        val centers = clusterBenchCenters(s, d)
-        val p = Fixtures.tmpPath("graft_kmeans_cents", d)
-        kmeansCentPathRef.set(p)
-        import s.implicits._
-        centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        kmeansStepFrame(s, d, centers)
-      },
+    "kmeans_step" -> QueryDef.sql(
+      (s, d) => kmeansStepFrame(s, d, kmeans8Centers(s, d)),
       s"""WITH cents AS (
         |  SELECT cell, centroid
-        |  FROM read_parquet('${kmeansCentPathRef.get}/*.parquet')
+        |  FROM read_parquet('${Artifacts.path("kmeans8_cents")}/*.parquet')
         |), dd AS (
         |  SELECT e.vec_id, e.embedding, c.cell,
         |    list_sum(list_transform(range(1, 65),
@@ -893,9 +710,7 @@ object AnnQueries {
         |SELECT CAST(cell AS INTEGER) AS cell, dim, count(*) AS n,
         |  floor((CAST(sum(mv) AS DOUBLE)
         |    / CAST(count(*) * 1000000 AS DOUBLE))*1000000 + 0.5)/1000000 AS mean
-        |FROM q GROUP BY cell, dim ORDER BY cell, dim""".stripMargin,
-      // bench: the step itself (centroids are the memoized artifact)
-      (s, d) => kmeansStepFrame(s, d, clusterBenchCenters(s, d))),
+        |FROM q GROUP BY cell, dim ORDER BY cell, dim""".stripMargin),
 
     // --- ColBERT-style late-interaction scoring (MaxSim): a
     // multi-vector "document" (label group) scores against a query

@@ -14,33 +14,16 @@ import graft.sources.Tables
   */
 object DedupQueries {
 
-  // dedup_simhash's signature-persist handshake: the build writes the
-  // signature table to a DATASET-KEYED path and records it; the oracle
-  // string — which Verify generates AFTER running the builds — then
-  // points at the same run's table. Keying by dataset dir means a
-  // bench pass at another scale writes a DIFFERENT path and can never
-  // clobber the table this pass's oracle reads, whatever order the
-  // driver interleaves verify / compare / bench.
-  private val simhashSigPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_simhash_sigs_default")
-  // lsh_bucket_stats' persisted band-index handshake (same protocol)
-  private val lshBandsPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_lsh_bands_default")
-  // bench steady state: the band index is a maintained dedup-store
-  // artifact — write it once per (JVM, dataset), time only the stats
-  private val lshBandsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // lsh_bucket_stats' band index (id, band, key): a maintained
+  // dedup-store artifact, so the query times only the stats
   private def lshBandsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    lshBandsMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_lsh_bands", d)
+    Artifacts.get("lsh_bands_k3s64b16", d) { p =>
       Dedup.minhashBandIndex(Tables.documents(s, d), "doc_id", "text",
           k = 3, sigLen = 64, bands = 16)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** The monitor aggregation lsh_bucket_stats times: per-band bucket
     * count / max bucket / exact candidate-pair bound from a persisted
@@ -55,99 +38,62 @@ object DedupQueries {
         sum(expr("sz * (sz - 1) div 2")).as("cand_pairs"))
       // bounded result (one row per band) — see QueryDef.sortSmall
       .transform(QueryDef.sortSmall(_, col("band")))
-  private def simhashSigPath(d: String): String =
-    Fixtures.tmpPath("graft_simhash_sigs", d)
 
-  // dedup_embcos uses the same signature-persist handshake for its
-  // IVF cell-assignment table (the vector-derived blocking key)
-  private val embcosCellPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_embcos_cells_default")
-  private def embcosCellPath(d: String): String =
-    Fixtures.tmpPath("graft_embcos_cells", d)
-
-  // Bench-path cell index, built ONCE per (JVM, dataset): the cell
-  // assignment is the corpus's ANN index — production maintains it as
-  // a persisted artifact beside the vectors (rebuilt at ingest), so
-  // the measured near-dup query is the candidate join + verify, not
-  // the index build + parquet write the Verify path keeps for its
-  // oracle handshake. Same fixture pattern as ScidaQueries'
-  // zOrderedPart. Distinct path from embcosCellPath: bench must never
-  // clobber the table a concurrent verify pass's oracle reads.
-  // dedup_incremental_bloom's bench-path filter, built once per (JVM,
-  // dataset) — see the query's bench note
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.util.sketch.BloomFilter]()
-
-  private val embcosBenchCells =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def embcosBenchCellsFor(s: org.apache.spark.sql.SparkSession,
+  // dedup_embcos' (vec_id, cell) IVF assignment table: the corpus's
+  // ANN index — production maintains it beside the vectors (rebuilt
+  // at ingest), so the measured near-dup query is the candidate join
+  // + verify, not the quantizer train + assignment write. The oracle
+  // replays the candidate join from the same parquet.
+  private def embcosCellsFor(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    embcosBenchCells.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_embcos_bench", d)
+    Artifacts.get("embcos_cells8_probe3", d) { p =>
       val embs = Tables.embeddings(s, d)
       val (_, centers) = graft.ann.Ivf.build(
         embs, "vec_id", "embedding", nCells = 8)
       Dedup.cellAssignments(embs, "vec_id", "embedding", centers, nProbe = 3)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
-  // dedup_semantic persists TWO artifacts the oracle replays from:
-  // the single-nearest cluster assignment and the quantizer itself
-  // (cell -> centroid), so the centroid-cosine ranking is computed by
-  // DuckDB from the same doubles the Spark plan carries as a literal
-  private val semCellPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_sem_cells_default")
-  private def semCellPath(d: String): String =
-    Fixtures.tmpPath("graft_sem_cells", d)
-  private val semCentPathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_sem_cents_default")
-  private def semCentPath(d: String): String =
-    Fixtures.tmpPath("graft_sem_cents", d)
+  // The base corpus (doc_id % 3 != 0) of the incremental family and
+  // its next batch (doc_id % 3 == 0)
+  private val inBase = pmod(col("doc_id"), lit(3)) =!= 0
+  private val inBatch = pmod(col("doc_id"), lit(3)) === 0
 
-  // dedup_clusters_incremental's persisted base artifact: the base
-  // corpus's component labels, built ONCE per (JVM, dataset) — in
-  // production the label table is the dedup store's primary artifact,
-  // maintained across batches; the measured increment is batch
-  // signatures + band probe + the super-node merge, never base CC.
-  // Oracle handshake: the path is recorded so DuckDB replays the
-  // merge from the SAME labels.
-  private val ccBasePathRef =
-    new java.util.concurrent.atomic.AtomicReference[String](
-      "/tmp/graft_ccbase_default")
-  // Bench-path base INDEX artifacts (band table + shingle table),
-  // built once per (JVM, dataset): production maintains them
-  // append-only beside the label table, so the measured increment is
-  // batch signatures + band probe + super-node merge — never base
-  // re-shingling. Verify keeps the inline derivation for its oracle
-  // handshake (same pattern as embcosBenchCells).
-  private val ccBenchIdx = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]()
-  private def ccBenchIdxFor(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) =
-    ccBenchIdx.computeIfAbsent(d, _ => {
-      val pb = Fixtures.tmpPath("graft_ccbase_bands", d)
-      val ps = Fixtures.tmpPath("graft_ccbase_sh", d)
-      val base = Tables.documents(s, d)
-        .filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      Dedup.minhashBandIndex(base, "doc_id", "text",
-        k = 3, sigLen = 64, bands = 16).write.mode("overwrite").parquet(pb)
-      Dedup.withShingles(base, "doc_id", "text", 3)
-        .write.mode("overwrite").parquet(ps)
-      (pb, ps)
-    })
-  private val ccBaseMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // dedup_incremental_bloom's Bloom filter over the base hashes: a
+  // maintenance-cycle artifact (rebuilt when the base compacts, not
+  // per batch)
+  private def baseBloomFor(d: String, base: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.util.sketch.BloomFilter =
+    Artifacts.get("base_bloom_8192", d) { _ =>
+      base.stat.bloomFilter(base.columns.head, 8192, 0.01)
+    }
+
+  // dedup_clusters_incremental's base artifacts: the base corpus's
+  // component labels (the dedup store's primary artifact, maintained
+  // across batches — the oracle replays the merge from the SAME
+  // labels) and its band + shingle index tables (maintained
+  // append-only beside them). The measured increment is batch
+  // signatures + band probe + the super-node merge, never base CC or
+  // base re-shingling.
   private def ccBaseFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    ccBaseMemo.computeIfAbsent(d, _ => {
-      val p = Fixtures.tmpPath("graft_ccbase", d)
-      Dedup.corpusLabels(Tables.documents(s, d)
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0), "doc_id", "text")
+    Artifacts.get("ccbase_labels", d) { p =>
+      Dedup.corpusLabels(Tables.documents(s, d).filter(inBase),
+          "doc_id", "text")
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
+  private def ccBaseIndexFor(s: org.apache.spark.sql.SparkSession,
+      d: String): (String, String) =
+    Artifacts.get("ccindex_base_k3s64b16", d) { p =>
+      val base = Tables.documents(s, d).filter(inBase)
+      Dedup.minhashBandIndex(base, "doc_id", "text",
+        k = 3, sigLen = 64, bands = 16)
+        .write.mode("overwrite").parquet(p + "/bands")
+      Dedup.withShingles(base, "doc_id", "text", 3)
+        .write.mode("overwrite").parquet(p + "/shingles")
+      (p + "/bands", p + "/shingles")
+    }
 
   // shared engine-stable cosine fragment — see QueryDef.cosSql
 
@@ -203,8 +149,8 @@ object DedupQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         Dedup.incrementalKeep(
-          Dedup.baseHashes(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), "text"),
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          Dedup.baseHashes(docs.filter(inBase), "text"),
+          docs.filter(inBatch),
           "doc_id", "text")
           .orderBy("h")
       },
@@ -236,8 +182,8 @@ object DedupQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         Dedup.minhashIncrementalKeep(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          docs.filter(inBase),
+          docs.filter(inBatch),
           "doc_id", "text", k = 3, sigLen = 64, bands = 16, minJ = 0.8)
           .orderBy("doc_id")
       },
@@ -261,13 +207,14 @@ object DedupQueries {
     // anti-join — the scale path when the base is billions of hashes
     // and each batch is mostly novel. Bit-identical output (no false
     // negatives; the exact join resolves every maybe). ---
-    "dedup_incremental_bloom" -> QueryDef.sqlBench(
+    "dedup_incremental_bloom" -> QueryDef.sql(
+      // the Bloom over the base is an artifact, so the measured
+      // increment is the probe + anti-join sliver
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Dedup.incrementalKeepBloom(
-          Dedup.baseHashes(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), "text"),
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          "doc_id", "text", expectedItems = 8192)
+        val base = Dedup.baseHashes(docs.filter(inBase), "text")
+        Dedup.incrementalKeepWithBloom(baseBloomFor(d, base), base,
+          docs.filter(inBatch), "doc_id", "text")
           .orderBy("h")
       },
       """WITH base AS (
@@ -277,21 +224,7 @@ object DedupQueries {
         |)
         |SELECT h, min(doc_id) AS doc_id FROM inc
         |WHERE h NOT IN (SELECT h FROM base)
-        |GROUP BY h ORDER BY h""".stripMargin,
-      // bench path: the Bloom over the base is a maintenance-cycle
-      // artifact (rebuilt when the base compacts, not per batch) —
-      // memoized per (JVM, dataset), so the measured increment is the
-      // probe + anti-join sliver, the steady-state cost
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val base = Dedup.baseHashes(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0), "text")
-        val bloom = bloomMemo.computeIfAbsent(d, _ =>
-          base.stat.bloomFilter(base.columns.head, 8192, 0.01))
-        Dedup.incrementalKeepWithBloom(bloom, base,
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text")
-          .orderBy("h")
-      }),
+        |GROUP BY h ORDER BY h""".stripMargin),
 
     // --- keep-list materialization: drop the higher-id side of every
     // near-dup pair (first-wins policy, the standard LSH-dedup keep
@@ -436,27 +369,16 @@ object DedupQueries {
     // banding drift, a lost doc, or a wrong bound all hash-fail
     // (signature correctness itself is pinned by HashingSpec).
     // s·(s−1) is even, so `div 2` stays exact integer arithmetic. ---
-    "lsh_bucket_stats" -> QueryDef.sqlBench(
-      (s, d) => {
-        val p = Fixtures.tmpPath("graft_lsh_bands", d)
-        lshBandsPathRef.set(p)
-        Dedup.minhashBandIndex(Tables.documents(s, d), "doc_id", "text",
-            k = 3, sigLen = 64, bands = 16)
-          .write.mode("overwrite").parquet(p)
-        lshBucketStatsFrame(s, p)
-      },
+    "lsh_bucket_stats" -> QueryDef.sql(
+      (s, d) => lshBucketStatsFrame(s, lshBandsFor(s, d)),
       s"""WITH b AS (
         |  SELECT band, key, count(*) AS sz
-        |  FROM read_parquet('${lshBandsPathRef.get}/*.parquet')
+        |  FROM read_parquet('${Artifacts.path("lsh_bands_k3s64b16")}/*.parquet')
         |  GROUP BY band, key
         |)
         |SELECT band, count(*) AS n_buckets, max(sz) AS max_size,
         |  CAST(sum(sz * (sz - 1) // 2) AS BIGINT) AS cand_pairs
-        |FROM b GROUP BY band ORDER BY band""".stripMargin,
-      // bench: the index is a maintained artifact (written once per
-      // JVM+dataset) — time the monitor's two partial-agg passes, not
-      // the index rebuild
-      (s, d) => lshBucketStatsFrame(s, lshBandsFor(s, d))),
+        |FROM b GROUP BY band ORDER BY band""".stripMargin),
 
     // --- per-doc n-gram novelty (the corpus-curation profiling
     // statistic behind "how much of this batch is genuinely new
@@ -609,21 +531,18 @@ object DedupQueries {
     // batch-touching pair set from the SAME persisted labels, so a
     // wrong projection, a lost relabel, or a recomputed base
     // hash-fails. ---
-    "dedup_clusters_incremental" -> QueryDef.sqlBench(
+    "dedup_clusters_incremental" -> QueryDef.sql(
+      // ONE batch signature pass, shared between the within-batch
+      // self-join and the base-index probe, then the super-node merge
       (s, d) => {
-        val p = ccBaseFor(s, d)
-        ccBasePathRef.set(p)
-        val docs = Tables.documents(s, d)
-        val base = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val baseLabels = s.read.parquet(p).select("doc_id", "cluster")
-        val bb = Dedup.minhashLshPairs(batch, "doc_id", "text",
-          k = 3, sigLen = 64, bands = 16, minJ = 0.8).select("doc_a", "doc_b")
-        val nb = Dedup.minhashIncrementalPairs(base, batch, "doc_id", "text",
-            k = 3, sigLen = 64, bands = 16, minJ = 0.8)
-          .select(col("doc_n").as("doc_a"), col("doc_b"))
-        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"),
-            bb.union(nb))
+        val baseLabels = s.read.parquet(ccBaseFor(s, d))
+          .select("doc_id", "cluster")
+        val (pb, ps) = ccBaseIndexFor(s, d)
+        val batch = Tables.documents(s, d).filter(inBatch)
+        val edges = Dedup.minhashIncrementalEdgesFromIndex(
+          s.read.parquet(pb), s.read.parquet(ps), batch, "doc_id", "text",
+          k = 3, sigLen = 64, bands = 16, minJ = 0.8)
+        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"), edges)
           .orderBy("doc_id")
       },
       shingleCte.replaceFirst("WITH ws", "WITH RECURSIVE ws") +
@@ -637,7 +556,7 @@ object DedupQueries {
         |  GROUP BY a.doc_id, b.doc_id, sa.n, sb.n
         |  HAVING floor((count(*)::DOUBLE / (sa.n + sb.n - count(*)))*1000000 + 0.5)/1000000 >= 0.8
         |), bl AS (
-        |  SELECT doc_id, cluster FROM read_parquet('${ccBasePathRef.get}/*.parquet')
+        |  SELECT doc_id, cluster FROM read_parquet('${Artifacts.path("ccbase_labels")}/*.parquet')
         |), edges AS (
         |  SELECT a, b FROM np UNION ALL SELECT b, a FROM np
         |  UNION ALL SELECT doc_id AS a, cluster AS b FROM bl WHERE doc_id <> cluster
@@ -648,26 +567,7 @@ object DedupQueries {
         |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.id
         |)
         |SELECT id AS doc_id, min(lbl) AS cluster
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-      // bench: steady-state increment against the PERSISTED base
-      // index (band + shingle tables, built once per dataset like any
-      // maintained dedup-store artifact) — measures ONE batch
-      // signature pass (shared between the within-batch self-join and
-      // the base-index probe — the r9 form shingled+signed the batch
-      // twice), band probe, and the super-node merge; never base
-      // re-shingling
-      (s, d) => {
-        val p = ccBaseFor(s, d)
-        val (pb, ps) = ccBenchIdxFor(s, d)
-        val docs = Tables.documents(s, d)
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        val baseLabels = s.read.parquet(p).select("doc_id", "cluster")
-        val edges = Dedup.minhashIncrementalEdgesFromIndex(
-          s.read.parquet(pb), s.read.parquet(ps), batch, "doc_id", "text",
-          k = 3, sigLen = 64, bands = 16, minJ = 0.8)
-        Dedup.clustersIncremental(baseLabels, batch.select("doc_id"), edges)
-          .orderBy("doc_id")
-      }),
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
 
     // --- 64-bit SimHash, 4×16-bit band join, Hamming <= 3 — oracled
     // via the signature-persist protocol: the build writes the per-doc
@@ -681,8 +581,7 @@ object DedupQueries {
     // (sim >> s) & 0xFFFF is sign-extension-invariant. ---
     "dedup_simhash" -> QueryDef.sql(
       (s, d) => {
-        val p = simhashSigPath(d)
-        simhashSigPathRef.set(p)
+        val p = Artifacts.path("simhash_sigs", d)
         val sigs = Dedup.simhashSigs(Tables.documents(s, d), "doc_id", "text")
         sigs.write.mode("overwrite").parquet(p)
         Dedup.simhashPairsFromSigs(s.read.parquet(p),
@@ -690,7 +589,7 @@ object DedupQueries {
           .orderBy("doc_a", "doc_b")
       },
       s"""WITH sigs AS (
-         |  SELECT doc_id, sim FROM read_parquet('${simhashSigPathRef.get}/*.parquet')
+         |  SELECT doc_id, sim FROM read_parquet('${Artifacts.path("simhash_sigs")}/*.parquet')
          |), e AS (
          |  SELECT doc_id, sim, band, (sim >> (band * 16)) & 65535 AS key
          |  FROM sigs CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b
@@ -722,25 +621,16 @@ object DedupQueries {
     // DECLARED candidate set, so the change re-declares the query and
     // its oracle: first item for the next build round, out of scope
     // for an optimization round. ---
-    "dedup_embcos" -> QueryDef.sqlBench(
+    "dedup_embcos" -> QueryDef.sql(
       // sortBarrier: the candidate join broadcasts at test scale (no
       // shuffle files) — the ORDER BY's sampling would re-run every
       // pairwise dot product without the barrier
-      (s, d) => {
-        val p = embcosCellPath(d)
-        embcosCellPathRef.set(p)
-        val embs = Tables.embeddings(s, d)
-        val (_, centers) = graft.ann.Ivf.build(
-          embs, "vec_id", "embedding", nCells = 8)
-        Dedup.cellAssignments(embs, "vec_id", "embedding", centers, nProbe = 3)
-          .write.mode("overwrite").parquet(p)
-        QueryDef.sortBarrier(
-          Dedup.embCosPairsFromCells(s.read.parquet(p), embs,
-            "vec_id", "embedding", minCos = 0.4))
-          .orderBy("id_a", "id_b")
-      },
+      (s, d) => QueryDef.sortBarrier(
+        Dedup.embCosPairsFromCells(s.read.parquet(embcosCellsFor(s, d)),
+          Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
+        .orderBy("id_a", "id_b"),
       s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${embcosCellPathRef.get}/*.parquet')
+         |  SELECT vec_id, cell FROM read_parquet('${Artifacts.path("embcos_cells8_probe3")}/*.parquet')
          |), cand AS (
          |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
          |  FROM asg x JOIN asg y ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -751,19 +641,7 @@ object DedupQueries {
          |  JOIN embeddings a ON a.vec_id = c.id_a
          |  JOIN embeddings b ON b.vec_id = c.id_b)
          |SELECT id_a, id_b, cos FROM p WHERE cos >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-      // bench path: the measured work is the near-dup OPERATOR
-      // (candidate equi-join on cell + cosine verify + distinct), fed
-      // from the memoized persisted index — not the quantizer train +
-      // assignment parquet write the Verify build performs for its
-      // signature-persist oracle
-      (s, d) => {
-        val p = embcosBenchCellsFor(s, d)
-        QueryDef.sortBarrier(
-          Dedup.embCosPairsFromCells(s.read.parquet(p),
-            Tables.embeddings(s, d), "vec_id", "embedding", minCos = 0.4))
-          .orderBy("id_a", "id_b")
-      }),
+         |ORDER BY id_a, id_b""".stripMargin),
 
     // --- SemDeDup pruning (arXiv:2303.09540): k-means cells +
     // within-cell dominance drop — the KEEP/DROP decision operator on
@@ -775,10 +653,8 @@ object DedupQueries {
     // anti-join) is hash-gated. ---
     "dedup_semantic" -> QueryDef.sql(
       (s, d) => {
-        val p = semCellPath(d)
-        val pc = semCentPath(d)
-        semCellPathRef.set(p)
-        semCentPathRef.set(pc)
+        val p = Artifacts.path("sem_cells", d)
+        val pc = Artifacts.path("sem_cents", d)
         val embs = Tables.embeddings(s, d)
         val (indexed, centers) = graft.ann.Ivf.build(
           embs, "vec_id", "embedding", nCells = 8)
@@ -795,9 +671,9 @@ object DedupQueries {
           .orderBy("vec_id")
       },
       s"""WITH asg AS (
-         |  SELECT vec_id, cell FROM read_parquet('${semCellPathRef.get}/*.parquet')
+         |  SELECT vec_id, cell FROM read_parquet('${Artifacts.path("sem_cells")}/*.parquet')
          |), cents AS (
-         |  SELECT cell, centroid FROM read_parquet('${semCentPathRef.get}/*.parquet')
+         |  SELECT cell, centroid FROM read_parquet('${Artifacts.path("sem_cents")}/*.parquet')
          |), v AS (
          |  SELECT a.vec_id, a.cell,
          |    floor((

@@ -8,19 +8,17 @@ import graft.sources.fits.FitsWriter
 /** FITS ingestion under the oracle gate — scida's FITS catalog loader
   * (reference: src/scida/io/_base.py:105, src/scida/io/fits.py:15):
   * orders is materialized as a FITS BINTABLE (driver-side fixture
-  * write, memoized per JVM), loaded back through the graft-fits
+  * write, built once as an artifact), loaded back through the graft-fits
   * DataSource, and aggregated; the DuckDB oracle recomputes from the
   * ORIGINAL parquet, so any header/record/endianness loss hash-fails.
   */
 object FitsQueries {
 
-  private val fileCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ordersFits(s: org.apache.spark.sql.SparkSession, d: String): String =
-    fileCache.computeIfAbsent(d, _ => writeOrdersFits(s, d))
+    Artifacts.get("fits_orders", d)(p => writeOrdersFits(s, d, p + ".fits"))
 
-  private def writeOrdersFits(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val path = Fixtures.tmpPath("graft_fits_orders", d) + ".fits"
+  private def writeOrdersFits(s: org.apache.spark.sql.SparkSession, d: String,
+      path: String): String = {
     val rows = Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .orderBy("o_orderkey")

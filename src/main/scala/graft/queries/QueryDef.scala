@@ -11,24 +11,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
     // by-name thunk, resolved at READ time: some oracles interpolate
-    // state the build records (dedup_simhash's signature-table path),
-    // so a consumer that snapshots oracle strings before running the
-    // builds must still see the post-build value — eager strings froze
-    // the defs-construction-time default instead
+    // artifact paths (dedup_simhash's signature table), so a consumer
+    // that snapshots oracle strings after running the builds sees the
+    // dataset the builds used, not a defs-construction-time default
     oracleThunk: Option[() => String] = None,
-    // optional bench-only build: gate-oracled queries compute an exact
-    // verdict alongside the operator for Verify; Bench times the
-    // operator ALONE via this override (sketch family)
-    benchBuild: Option[(SparkSession, String) => DataFrame] = None) {
+    // verdict over the build's OWN output, for oracles that check an
+    // approximate operator (sketch bounds, ANN recall): the gate adds
+    // the exact side and emits the verdict row the oracle answers.
+    // Bench times `build`; Verify checks gate(build) — one build path.
+    gate: Option[(SparkSession, String, DataFrame) => DataFrame] = None) {
   def oracle: Option[String] = oracleThunk.map(_())
+
+  /** What the oracle checks: the gate over the build, else the build. */
+  def checked(s: SparkSession, d: String): DataFrame = {
+    val df = build(s, d)
+    gate.fold(df)(_(s, d, df))
+  }
 }
 
 object QueryDef {
   def sql(b: (SparkSession, String) => DataFrame, o: => String): QueryDef =
     QueryDef(b, Some(() => o))
-  def sqlBench(b: (SparkSession, String) => DataFrame, o: => String,
-      bench: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(b, Some(() => o), Some(bench))
+  def gated(b: (SparkSession, String) => DataFrame, o: => String,
+      gate: (SparkSession, String, DataFrame) => DataFrame): QueryDef =
+    QueryDef(b, Some(() => o), Some(gate))
   def rowsOnly(b: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(b, None)
 

@@ -44,7 +44,7 @@ object Tables {
   /** Cached read of a derived-artifact parquet path (rank tables,
     * persisted indexes): same per-session catalog rationale — the
     * listing/footer job runs once, consumers share the plan. Callers
-    * must key artifact paths per dataset (Fixtures.tmpPath does). */
+    * must key artifact paths per dataset (Artifacts.path does). */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
     val k = (spark, path, "__artifact__")
     val hit = catalog.get(k)

@@ -6,7 +6,8 @@ import org.apache.spark.storage.StorageLevel
 /** CacheScope's scope contracts: persists release at scope end, and
   * trackCheckpoint's lineage truncation — the blocks are freed at
   * releaseAll() and the frame is DEAD afterwards (no silent rebuild),
-  * unless the config-selected reliable path is on. */
+  * unless the config-selected reliable path is on, which without a
+  * checkpoint dir fails instead of silently staying local. */
 class CacheScopeSpec extends SparkSpec {
 
   test("track: persist is live inside the scope, released at scope end") {
@@ -39,9 +40,27 @@ class CacheScopeSpec extends SparkSpec {
     intercept[Exception] { ckpt.count() }
   }
 
+  // runs BEFORE the reliable-path test below: a SparkContext's
+  // checkpoint dir cannot be unset, and no other suite sets one
+  test("reliable path without a checkpoint dir fails loudly") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val e = intercept[IllegalStateException] {
+        CacheScope.withScope(CacheScope.trackCheckpoint(spark.range(0, 10).toDF("id")))
+      }
+      assert(e.getMessage.contains("setCheckpointDir"))
+    } finally {
+      spark.conf.set("spark.graft.checkpoint.reliable", "false")
+    }
+  }
+
   test("reliable path: spark.graft.checkpoint.reliable survives scope end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    // the context keeps pointing at `dir` after this test — a
+    // SparkContext's checkpoint dir cannot be unset — so only the
+    // files go in `finally`; a later reliable checkpoint recreates it
+    spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {
       val ckpt = CacheScope.withScope {
@@ -56,6 +75,7 @@ class CacheScopeSpec extends SparkSpec {
       assert(ckpt.count() == 50)
     } finally {
       spark.conf.set("spark.graft.checkpoint.reliable", "false")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }

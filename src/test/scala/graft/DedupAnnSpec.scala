@@ -14,9 +14,10 @@ class DedupAnnSpec extends SparkSpec {
   private lazy val embs = Tables.embeddings(spark, sfDir)
 
   test("ngram-jaccard prefix filter == naive all-shingles join (map-side prefix)") {
-    // pins the r13 map-side prefix rewrite (transform + array_sort +
-    // slice over the cached shingle array, replacing the exploded
-    // groupBy(id, n) + collect_list aggregate): the PPJoin candidate
+    // pins the r13 map-side prefix rewrite (the compiled
+    // graft_prefix_tokens expression over the cached shingle array,
+    // replacing the exploded groupBy(id, n) + collect_list
+    // aggregate): the PPJoin candidate
     // set must stay complete — every pair the definitional
     // all-shingles join finds at the threshold must survive
     val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)

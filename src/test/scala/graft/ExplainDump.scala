@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Batch plan dumper: write `explain("formatted")` of named bench
   * queries to `<outDir>/<name>_<suffix>.txt`, one JVM for the whole
-  * batch (ExplainMain pays a session per invocation).
+  * batch. Per-query jobs, stages and plan counts come from
+  * `python3 perfbench/run.py --queries q --trace 1` instead.
   * args = <sfDir> <outDir> <suffix> name1 name2 ... */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
