@@ -31,11 +31,7 @@ object GraftSession {
     b
     .withExtensions(new GraftExtensions)
     .config("spark.sql.session.timeZone", "UTC")
-    // operator knob: AQE is right at cluster scale (runtime re-plan,
-    // skew splitting); SPARK_GRAFT_AQE=false lets a perf harness
-    // measure without per-stage re-planning overhead
-    .config("spark.sql.adaptive.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+    .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized

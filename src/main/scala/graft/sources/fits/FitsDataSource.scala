@@ -1,15 +1,8 @@
 package graft.sources.fits
 
-import java.util.{Map => JMap}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
+import java.nio.ByteBuffer
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.{ArrayCol, ArrayLayout, ArraySlice, ArraySource}
 
 /** Spark DataSource V2 over FITS binary tables —
   * `spark.read.format("graft-fits").load(file)`.
@@ -19,147 +12,43 @@ import org.apache.spark.unsafe.types.UTF8String
   * src/scida/io/fits.py:15); here row ranges of the record data
   * become InputPartitions (the data is row-major on disk, so each
   * partition is ONE contiguous read), vector columns flatten to
-  * `name_0..name_k`, `row_id` carries the global row index, and
-  * column pruning binds only the projected columns' extractors —
-  * the contiguous row read is the IO unit either way, as with any
-  * row-major format.
+  * `name_0..name_k` and `row_id` carries the global row index. Every
+  * column addresses the same record buffer (stride = the record
+  * size), so pruning skips decoding, not IO — the contiguous row read
+  * is the IO unit either way, as with any row-major format.
   */
-final class FitsDataSource extends TableProvider with DataSourceRegister {
+final class FitsDataSource extends ArraySource {
   override def shortName(): String = "graft-fits"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FitsTable.schemaFor(FitsTable.table(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new FitsTable(new CaseInsensitiveStringMap(properties), schema)
+  override def layout(path: String, options: CaseInsensitiveStringMap): ArrayLayout =
+    FitsLayout(path)
 }
 
-object FitsTable {
-  final case class Col(name: String, fits: FitsReader.ColDef, comp: Int, dt: DataType)
-
-  def path(options: CaseInsensitiveStringMap): String =
-    Option(options.get("path")).getOrElse(sys.error("graft-fits: 'path' required"))
-
-  def table(options: CaseInsensitiveStringMap): FitsReader.BinTable =
-    FitsReader.binTable(path(options))
-
-  def sparkType(t: Char): DataType = t match {
-    case 'L' => BooleanType
-    case 'B' => ShortType // FITS B is unsigned byte
-    case 'I' => ShortType
-    case 'J' => IntegerType
-    case 'K' => LongType
-    case 'E' => FloatType
-    case 'D' => DoubleType
-    case 'A' => StringType
-    case other => sys.error(s"unsupported FITS column type '$other'")
-  }
-
-  def columnsFor(t: FitsReader.BinTable): Seq[Col] =
+final case class FitsLayout(path: String) extends ArrayLayout {
+  override def columns: Seq[ArrayCol] = {
+    val t = FitsReader.binTable(path)
     t.cols.flatMap { c =>
-      val dt = sparkType(c.tchar)
-      if (c.tchar == 'A' || c.repeat == 1) Seq(Col(c.name, c, 0, dt))
-      else (0 until c.repeat).map(i => Col(s"${c.name}_$i", c, i, dt))
-    }
-
-  def schemaFor(t: FitsReader.BinTable): StructType =
-    StructType(
-      StructField("row_id", LongType, nullable = false) +:
-        columnsFor(t).map(c => StructField(c.name, c.dt, nullable = false)))
-}
-
-final class FitsTable(options: CaseInsensitiveStringMap, tschema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-fits:${options.get("path")}"
-  override def schema(): StructType = tschema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new FitsScanBuilder(options, tschema)
-}
-
-final class FitsScanBuilder(options: CaseInsensitiveStringMap, full: StructType)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(full.fields.filter(f => keep.contains(f.name)))
-  }
-  override def build(): Scan = new FitsScan(options, required)
-}
-
-final case class FitsPartition(path: String, rowStart: Long, nRows: Int)
-    extends InputPartition
-
-final class FitsScan(options: CaseInsensitiveStringMap, required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val t = FitsTable.table(options)
-    val p = FitsTable.path(options)
-    val rowsPer = options.getOrDefault("rowsPerPartition", (1 << 20).toString).toInt
-    (0L until t.rows by rowsPer)
-      .map(s => FitsPartition(p, s, math.min(rowsPer, t.rows - s).toInt))
-      .toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FitsReaderFactory(required.fields.map(_.name))
-}
-
-final class FitsReaderFactory(colNames: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FitsPartitionReader(partition.asInstanceOf[FitsPartition], colNames)
-}
-
-/** One contiguous read of the partition's row records; per-column
-  * extraction bound once up front (row-major stride = rowBytes). */
-final class FitsPartitionReader(p: FitsPartition, colNames: Array[String])
-    extends PartitionReader[InternalRow] {
-
-  private val t = FitsReader.binTable(p.path)
-  private val byName = FitsTable.columnsFor(t).map(c => c.name -> c).toMap
-  private val buf = FitsReader.readRows(p.path, t, p.rowStart, p.nRows)
-  private val rb = t.rowBytes
-
-  private val getters: Array[Int => Any] = colNames.map {
-    case "row_id" => (i: Int) => p.rowStart + i
-    case name =>
-      val c = byName(name)
-      val base = c.fits.offset + c.comp * c.fits.elemSize
-      c.fits.tchar match {
-        case 'L' => (i: Int) => buf.get(i * rb + base) == 'T'.toByte
-        case 'B' => (i: Int) => (buf.get(i * rb + base) & 0xff).toShort
-        case 'I' => (i: Int) => buf.getShort(i * rb + base)
-        case 'J' => (i: Int) => buf.getInt(i * rb + base)
-        case 'K' => (i: Int) => buf.getLong(i * rb + base)
-        case 'E' => (i: Int) => buf.getFloat(i * rb + base)
-        case 'D' => (i: Int) => buf.getDouble(i * rb + base)
-        case 'A' => (i: Int) => {
-          val bytes = new Array[Byte](c.fits.repeat)
-          buf.position(i * rb + base)
-          buf.get(bytes)
-          var end = bytes.length
-          while (end > 0 && (bytes(end - 1) == ' ' || bytes(end - 1) == 0)) end -= 1
-          UTF8String.fromBytes(bytes, 0, end)
-        }
-        case other => sys.error(s"unreachable FITS type $other")
+      // FITS B is an unsigned byte; A is one string of `repeat` chars
+      val (kind, size) = c.tchar match {
+        case 'L' => ('L', 1)
+        case 'B' => ('u', 1)
+        case 'I' | 'J' | 'K' => ('i', c.elemSize)
+        case 'E' | 'D' => ('f', c.elemSize)
+        case 'A' => ('A', c.repeat)
+        case other => sys.error(s"unsupported FITS column type '$other'")
       }
+      def col(name: String, comp: Int) =
+        ArrayCol(name, "", kind, size, t.rowBytes, c.offset + comp * c.elemSize)
+      if (c.tchar == 'A' || c.repeat == 1) Seq(col(c.name, 0))
+      else (0 until c.repeat).map(i => col(s"${c.name}_$i", i))
+    }
   }
 
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < p.nRows }
-
-  override def get(): InternalRow = {
-    val out = new Array[Any](getters.length)
-    var j = 0
-    while (j < getters.length) { out(j) = getters(j)(i); j += 1 }
-    new GenericInternalRow(out)
+  override def slices(rowsPer: Int): Seq[ArraySlice] = {
+    val rows = FitsReader.binTable(path).rows
+    (0L until rows by rowsPer).map(s => ArraySlice(path, s, math.min(rowsPer, rows - s).toInt, s))
   }
 
-  override def close(): Unit = ()
+  override def read(s: ArraySlice, buffers: Seq[String]): Map[String, ByteBuffer] =
+    buffers.map(b => b -> FitsReader.readRows(s.file, FitsReader.binTable(s.file),
+      s.rowStart, s.nRows)).toMap
 }

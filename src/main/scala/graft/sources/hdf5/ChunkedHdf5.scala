@@ -80,7 +80,7 @@ object ChunkedHdf5 {
   /** Row count of `group` in one chunk, from dataspace metadata only. */
   def rowCount(file: String, group: String): Long = {
     val f = metadata(file)
-    val byDs = Hdf5Table.columnsFromFile(f, group, file).map(_.dsPath).distinct
+    val byDs = Hdf5Layout.columnsFromFile(f, group, file).map(_.buffer).distinct
     val rows = f.datasets.filter(d => byDs.contains(d.path)).map(_.rows).distinct
     require(rows.size == 1,
       s"datasets under '$group' in $file disagree on row count: $rows")

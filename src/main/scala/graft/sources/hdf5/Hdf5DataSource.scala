@@ -1,15 +1,8 @@
 package graft.sources.hdf5
 
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types._
+import java.nio.ByteBuffer
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.{ArrayCol, ArrayLayout, ArraySlice, ArraySource}
 
 /** Spark DataSource V2 over (chunked) HDF5 snapshots —
   * `spark.read.format("graft-hdf5").option("group", "PartType0")
@@ -24,153 +17,27 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `get_dataframe`, src/scida/fields.py:478) and `row_id` carries the
   * global particle index (chunk offsets are summed driver-side from
   * metadata only), which is what halo offset-table assignment keys
-  * on.
-  *
-  * Column pruning is pushed into the source: unprojected HDF5
-  * datasets are never read from disk (SupportsPushDownRequiredColumns).
+  * on. Unprojected HDF5 datasets are never read from disk.
   */
-final class Hdf5DataSource extends TableProvider with DataSourceRegister {
+final class Hdf5DataSource extends ArraySource {
   override def shortName(): String = "graft-hdf5"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Hdf5Table.schemaFor(Hdf5Table.chunks(options), options.getOrDefault("group", "/"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new Hdf5Table(new CaseInsensitiveStringMap(properties), schema)
+  override def layout(path: String, options: CaseInsensitiveStringMap): ArrayLayout =
+    Hdf5Layout(path, options.getOrDefault("group", "/"),
+      options.getOrDefault("fileprefix", ""))
 }
 
-object Hdf5Table {
-  /** Column spec: output column -> (dataset path, component index). */
-  final case class Col(name: String, dsPath: String, comp: Int, dt: DataType)
-
-  def chunks(options: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(options.get("path")).getOrElse(
-      sys.error("graft-hdf5: 'path' required"))
-    ChunkedHdf5.discoverChunks(path, options.getOrDefault("fileprefix", ""))
-  }
-
-  def sparkType(d: Hdf5Reader.Dtype): DataType = (d.clazz, d.size, d.signed) match {
-    case (0, 1, true) => ByteType
-    case (0, 2, true) => ShortType
-    case (0, 4, true) => IntegerType
-    case (0, 8, true) => LongType
-    case (0, 1, false) => ShortType
-    case (0, 2, false) => IntegerType
-    case (0, 4, false) => LongType
-    case (0, 8, false) => LongType // u8 ids: values < 2^63 in practice
-    case (1, 4, _) => FloatType
-    case (1, 8, _) => DoubleType
-    case (c, s, _) => sys.error(s"unsupported dtype class=$c size=$s")
-  }
+final case class Hdf5Layout(path: String, group: String, fileprefix: String)
+    extends ArrayLayout {
+  private def chunks: Seq[String] = ChunkedHdf5.discoverChunks(path, fileprefix)
 
   /** Datasets under `group` in the first chunk define the table. */
-  def columnsFor(firstChunk: String, group: String): Seq[Col] =
-    columnsFromFile(ChunkedHdf5.metadata(firstChunk), group, firstChunk)
-
-  def columnsFromFile(f: Hdf5Reader.H5File, group: String, label: String): Seq[Col] = {
-    val prefix = if (group == "/" || group.isEmpty) "/" else s"/${group.stripPrefix("/")}/"
-    val ds = f.datasets.filter(d => d.path.startsWith(prefix) &&
-      !d.path.stripPrefix(prefix).contains("/"))
-    require(ds.nonEmpty, s"no datasets under group '$group' in $label")
-    ds.sortBy(_.path).flatMap { d =>
-      val base = d.path.stripPrefix(prefix)
-      val t = sparkType(d.dtype)
-      if (d.rowWidth == 1) Seq(Col(base, d.path, 0, t))
-      else (0 until d.rowWidth).map(i => Col(s"${base}_$i", d.path, i, t))
-    }
+  override def columns: Seq[ArrayCol] = {
+    val first = chunks.head
+    Hdf5Layout.columnsFromFile(ChunkedHdf5.metadata(first), group, first)
   }
 
-  def schemaFor(chunkFiles: Seq[String], group: String): StructType =
-    StructType(
-      StructField("row_id", LongType, nullable = false) +:
-        columnsFor(chunkFiles.head, group)
-          .map(c => StructField(c.name, c.dt, nullable = false)))
-}
-
-final class Hdf5Table(options: CaseInsensitiveStringMap, tschema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-hdf5:${options.get("path")}"
-  override def schema(): StructType = tschema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new Hdf5ScanBuilder(options, tschema)
-}
-
-final class Hdf5ScanBuilder(options: CaseInsensitiveStringMap, full: StructType)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = full
-  private var rowIdFilters: Array[Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source column order for a deterministic read plan
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(full.fields.filter(f => keep.contains(f.name)))
-  }
-  /** row_id predicates prune PARTITIONS at planning (a chunk slice
-    * whose [globalStart, globalStart+n) span cannot satisfy them is
-    * never read — the mechanism behind zoom-target selection,
-    * `ZoomTargets`). Every filter is still returned for post-scan
-    * evaluation: pruning is conservative interval logic, not exact
-    * row filtering. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    rowIdFilters = filters.filter(RowIdPruning.usable)
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = rowIdFilters
-  override def build(): Scan = new Hdf5Scan(options, required, rowIdFilters)
-}
-
-/** Interval logic for row_id predicate trees over a partition's
-  * [lo, hi) global-row span: `mayMatch` is a sound overapproximation
-  * (keeps any partition that COULD contain a satisfying row), so
-  * pruning never drops data and Spark's post-scan filter keeps
-  * exactness. */
-private[hdf5] object RowIdPruning {
-  import org.apache.spark.sql.sources._
-  private def num(v: Any): Long = v.asInstanceOf[Number].longValue()
-  private def isNum(v: Any): Boolean = v.isInstanceOf[Number]
-
-  def usable(f: Filter): Boolean = f match {
-    case EqualTo("row_id", v) => isNum(v)
-    case GreaterThan("row_id", v) => isNum(v)
-    case GreaterThanOrEqual("row_id", v) => isNum(v)
-    case LessThan("row_id", v) => isNum(v)
-    case LessThanOrEqual("row_id", v) => isNum(v)
-    case In("row_id", vs) => vs.nonEmpty && vs.forall(isNum)
-    case And(a, b) => usable(a) && usable(b)
-    case Or(a, b) => usable(a) && usable(b)
-    case _ => false
-  }
-
-  def mayMatch(f: Filter, lo: Long, hi: Long): Boolean = f match {
-    case EqualTo(_, v) => lo <= num(v) && num(v) < hi
-    case GreaterThan(_, v) => hi - 1 > num(v)
-    case GreaterThanOrEqual(_, v) => hi - 1 >= num(v)
-    case LessThan(_, v) => lo < num(v)
-    case LessThanOrEqual(_, v) => lo <= num(v)
-    case In(_, vs) => vs.exists(v => lo <= num(v) && num(v) < hi)
-    case And(a, b) => mayMatch(a, lo, hi) && mayMatch(b, lo, hi)
-    case Or(a, b) => mayMatch(a, lo, hi) || mayMatch(b, lo, hi)
-    case _ => true
-  }
-}
-
-/** One partition = a row slice of one chunk file. */
-final case class Hdf5Partition(file: String, rowStart: Long, nRows: Int,
-    globalStart: Long) extends InputPartition
-
-final class Hdf5Scan(options: CaseInsensitiveStringMap, required: StructType,
-    rowIdFilters: Array[Filter] = Array.empty)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = Hdf5Table.chunks(options)
-    val group = options.getOrDefault("group", "/")
-    val rowsPer = options.getOrDefault("rowsPerPartition", (1 << 21).toString).toInt
+  override def slices(rowsPer: Int): Seq[ArraySlice] = {
+    val files = chunks
     // row counts come from each chunk's METADATA (dataspace dims) —
     // tiny reads, no data touched on the driver
     val counts = files.map(f => ChunkedHdf5.rowCount(f, group))
@@ -178,137 +45,37 @@ final class Hdf5Scan(options: CaseInsensitiveStringMap, required: StructType,
     files.zipWithIndex.flatMap { case (f, i) =>
       val n = counts(i)
       (0L until n by rowsPer).map { s =>
-        Hdf5Partition(f, s, math.min(rowsPer, n - s).toInt, offsets(i) + s)
+        ArraySlice(f, s, math.min(rowsPer, n - s).toInt, offsets(i) + s)
       }
-    }.filter(p => rowIdFilters.forall(
-      RowIdPruning.mayMatch(_, p.globalStart, p.globalStart + p.nRows)))
-      .toArray
+    }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Hdf5ReaderFactory(options.getOrDefault("group", "/"), required)
-}
-
-final class Hdf5ReaderFactory(group: String, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[Hdf5Partition]
-    new Hdf5PartitionReader(p, group, required.fields.map(_.name))
+  override def read(s: ArraySlice, buffers: Seq[String]): Map[String, ByteBuffer] = {
+    val ds = ChunkedHdf5.metadata(s.file).datasets.map(d => d.path -> d).toMap
+    buffers.map(b => b -> Hdf5Reader.readRows(s.file, ds(b), s.rowStart, s.nRows)).toMap
   }
-
-  // Vectorized path: the partition reader already holds columnar
-  // buffers, so serving ColumnarBatch avoids one GenericInternalRow
-  // allocation + boxing per row and feeds whole-stage codegen through
-  // ColumnarToRow — the 100x-scale read path.
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new Hdf5ColumnarReader(partition.asInstanceOf[Hdf5Partition], group, required)
 }
 
-/** Columnar partition reader: fills OnHeapColumnVectors straight from
-  * the per-dataset slice buffers in 64k-row batches via the shared
-  * ColumnarFill kernels. */
-final class Hdf5ColumnarReader(p: Hdf5Partition, group: String, schema: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val h5 = ChunkedHdf5.metadata(p.file)
-  private val byName =
-    Hdf5Table.columnsFromFile(h5, group, p.file).map(c => c.name -> c).toMap
-  private val dsMeta = h5.datasets.map(d => d.path -> d).toMap
-
-  private val buffers: Map[String, java.nio.ByteBuffer] =
-    schema.fieldNames.filter(_ != "row_id").map(byName(_)).map(_.dsPath).distinct
-      .map { path =>
-        path -> Hdf5Reader.readRows(p.file, dsMeta(path), p.rowStart, p.nRows)
-      }.toMap
-
-  private val batchSize = math.max(math.min(p.nRows, 1 << 16), 1)
-  private val vectors = schema.fields.map(f => new OnHeapColumnVector(batchSize, f.dataType))
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-
-  private val fillers: Array[(Int, Int) => Unit] =
-    schema.fieldNames.zip(vectors).map {
-      case ("row_id", vec) => graft.sources.ColumnarFill.idFiller(vec, p.globalStart)
-      case (name, vec) =>
-        val c = byName(name)
-        val d = dsMeta(c.dsPath)
-        val kind = if (d.dtype.clazz == 1) 'f' else if (d.dtype.signed) 'i' else 'u'
-        graft.sources.ColumnarFill.filler(vec, buffers(c.dsPath), kind,
-          d.dtype.size, d.rowWidth, c.comp, c.dsPath)
-    }
-
-  private var offset = 0
-  override def next(): Boolean =
-    if (offset >= p.nRows) false
-    else {
-      val n = math.min(batchSize, p.nRows - offset)
-      vectors.foreach(_.reset())
-      fillers.foreach(_(offset, n))
-      batch.setNumRows(n)
-      offset += n
-      true
-    }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = batch.close()
-}
-
-/** Reads its slice of each projected dataset into flat buffers once,
-  * then serves rows — column-major IO, row-major emission. Per-column
-  * value extraction is bound once up front (no per-row dispatch). */
-final class Hdf5PartitionReader(p: Hdf5Partition, group: String,
-    colNames: Array[String]) extends PartitionReader[InternalRow] {
-
-  private val h5 = ChunkedHdf5.metadata(p.file)
-  private val byName =
-    Hdf5Table.columnsFromFile(h5, group, p.file).map(c => c.name -> c).toMap
-  private val dsMeta = h5.datasets.map(d => d.path -> d).toMap
-
-  // one buffer per distinct dataset actually projected
-  private val buffers: Map[String, java.nio.ByteBuffer] =
-    colNames.filter(_ != "row_id").map(byName(_)).map(_.dsPath).distinct.map { path =>
-      path -> Hdf5Reader.readRows(p.file, dsMeta(path), p.rowStart, p.nRows)
-    }.toMap
-
-  private val getters: Array[Int => Any] = colNames.map {
-    case "row_id" => (i: Int) => p.globalStart + i
-    case name =>
-      val c = byName(name)
-      val d = dsMeta(c.dsPath)
-      val buf = buffers(c.dsPath)
-      val w = d.rowWidth; val comp = c.comp
-      (d.dtype.clazz, d.dtype.size, d.dtype.signed) match {
-        case (0, 1, true) => (i: Int) => buf.get(i * w + comp)
-        case (0, 2, true) => (i: Int) => buf.getShort((i * w + comp) * 2)
-        case (0, 4, true) => (i: Int) => buf.getInt((i * w + comp) * 4)
-        case (0, 8, true) => (i: Int) => buf.getLong((i * w + comp) * 8)
-        case (0, 1, false) => (i: Int) => (buf.get(i * w + comp) & 0xff).toShort
-        case (0, 2, false) => (i: Int) => buf.getShort((i * w + comp) * 2) & 0xffff
-        case (0, 4, false) => (i: Int) => buf.getInt((i * w + comp) * 4) & 0xffffffffL
-        case (0, 8, false) => (i: Int) => {
-          val v = buf.getLong((i * w + comp) * 8)
-          if (v < 0) sys.error(s"u8 value >= 2^63 in ${c.dsPath} does not fit LongType")
-          v
-        }
-        case (1, 4, _) => (i: Int) => buf.getFloat((i * w + comp) * 4)
-        case (1, 8, _) => (i: Int) => buf.getDouble((i * w + comp) * 8)
-        case t => sys.error(s"unreachable dtype $t")
+object Hdf5Layout {
+  /** One column per dataset component; the buffer is the dataset path. */
+  def columnsFromFile(f: Hdf5Reader.H5File, group: String, label: String): Seq[ArrayCol] = {
+    val prefix = if (group == "/" || group.isEmpty) "/" else s"/${group.stripPrefix("/")}/"
+    val ds = f.datasets.filter(d => d.path.startsWith(prefix) &&
+      !d.path.stripPrefix(prefix).contains("/"))
+    require(ds.nonEmpty, s"no datasets under group '$group' in $label")
+    ds.sortBy(_.path).flatMap { d =>
+      val base = d.path.stripPrefix(prefix)
+      val (c, size) = (d.dtype.clazz, d.dtype.size)
+      val kind = c match {
+        case 0 => if (d.dtype.signed) 'i' else 'u'
+        case 1 => 'f'
+        case _ => '?'
       }
+      if (!ArrayCol.supported(kind, size)) sys.error(s"unsupported dtype class=$c size=$size")
+      def col(name: String, comp: Int) =
+        ArrayCol(name, d.path, kind, size, d.rowWidth * size, comp * size)
+      if (d.rowWidth == 1) Seq(col(base, 0))
+      else (0 until d.rowWidth).map(i => col(s"${base}_$i", i))
+    }
   }
-
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < p.nRows }
-
-  override def get(): InternalRow = {
-    val out = new Array[Any](getters.length)
-    var j = 0
-    while (j < getters.length) { out(j) = getters(j)(i); j += 1 }
-    new GenericInternalRow(out)
-  }
-
-  override def close(): Unit = ()
 }

@@ -1,14 +1,8 @@
 package graft.sources.zarr
 
-import java.util.{Map => JMap}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
+import java.nio.ByteBuffer
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.{ArrayCol, ArrayLayout, ArraySlice, ArraySource}
 
 /** Spark DataSource V2 over zarr v2 stores —
   * `spark.read.format("graft-zarr").load(dir)`.
@@ -21,102 +15,41 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * across the scan — on a 1000-executor cluster, 1000 chunks
   * decompress concurrently with no driver-side data motion. 2-D
   * arrays flatten to `name_0..name_k` columns (scida get_dataframe,
-  * fields.py:478) and `row_id` carries the global row index. Column
-  * pruning is pushed into the source: unprojected arrays are never
-  * opened.
+  * fields.py:478) and `row_id` carries the global row index.
+  * Unprojected arrays are never opened.
   *
   * All arrays in the store must agree on axis-0 length and chunking
   * (scida's virtual-concat contract for one particle type).
   */
-final class ZarrDataSource extends TableProvider with DataSourceRegister {
+final class ZarrDataSource extends ArraySource {
   override def shortName(): String = "graft-zarr"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ZarrTable.schemaFor(ZarrTable.store(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new ZarrTable(new CaseInsensitiveStringMap(properties), schema)
+  // container selection for multi-container stores (Group/Subhalo
+  // catalog tables of different lengths) — the zarr analogue of the
+  // hdf5 source's particle-type `group` option
+  override def layout(path: String, options: CaseInsensitiveStringMap): ArrayLayout =
+    ZarrLayout(path, Option(options.get("group")).getOrElse(""))
 }
 
-object ZarrTable {
-  final case class Col(name: String, array: String, comp: Int, dt: DataType)
-
-  def store(options: CaseInsensitiveStringMap): ZarrStore.Store = {
-    val path = Option(options.get("path")).getOrElse(
-      sys.error("graft-zarr: 'path' required"))
+/** `group` travels with the layout, so the executor-side re-open sees
+  * the same container the driver planned. */
+final case class ZarrLayout(path: String, group: String) extends ArrayLayout {
+  def store: ZarrStore.Store = {
     val st = ZarrStore.open(path)
-    // container selection for multi-container stores (Group/Subhalo
-    // catalog tables of different lengths) — the zarr analogue of the
-    // hdf5 source's particle-type `group` option
-    Option(options.get("group")).filter(_.nonEmpty)
-      .map(g => ZarrStore.subGroup(st, g)).getOrElse(st)
+    if (group.nonEmpty) ZarrStore.subGroup(st, group) else st
   }
 
-  /** Executor-side re-open with the partition's container context. */
-  def reopen(p: ZarrPartition): ZarrStore.Store = {
-    val st = ZarrStore.open(p.path)
-    if (p.group.nonEmpty) ZarrStore.subGroup(st, p.group) else st
-  }
-
-  def sparkType(m: ZarrStore.ArrayMeta): DataType = (m.kind, m.elemSize) match {
-    case ('f', 4) => FloatType
-    case ('f', 8) => DoubleType
-    case ('i', 1) => ByteType
-    case ('i', 2) => ShortType
-    case ('i', 4) => IntegerType
-    case ('i', 8) => LongType
-    case ('u', 1) => ShortType
-    case ('u', 2) => IntegerType
-    case ('u', 4) => LongType
-    case ('u', 8) => LongType // fails fast on values >= 2^63 at read
-    case (k, s) => sys.error(s"unsupported zarr dtype kind=$k size=$s")
-  }
-
-  def columnsFor(s: ZarrStore.Store): Seq[Col] =
-    s.arrays.sortBy(_.name).flatMap { a =>
-      val t = sparkType(a)
-      if (a.rowWidth == 1) Seq(Col(a.name, a.name, 0, t))
-      else (0 until a.rowWidth).map(i => Col(s"${a.name}_$i", a.name, i, t))
+  override def columns: Seq[ArrayCol] =
+    store.arrays.sortBy(_.name).flatMap { a =>
+      val (k, size) = (a.kind, a.elemSize)
+      if (!ArrayCol.supported(k, size)) sys.error(s"unsupported zarr dtype kind=$k size=$size")
+      def col(name: String, comp: Int) =
+        ArrayCol(name, a.name, k, size, a.rowWidth * size, comp * size)
+      if (a.rowWidth == 1) Seq(col(a.name, 0))
+      else (0 until a.rowWidth).map(i => col(s"${a.name}_$i", i))
     }
 
-  def schemaFor(s: ZarrStore.Store): StructType =
-    StructType(
-      StructField("row_id", LongType, nullable = false) +:
-        columnsFor(s).map(c => StructField(c.name, c.dt, nullable = false)))
-}
-
-final class ZarrTable(options: CaseInsensitiveStringMap, tschema: StructType)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-zarr:${options.get("path")}"
-  override def schema(): StructType = tschema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(options, tschema)
-}
-
-final class ZarrScanBuilder(options: CaseInsensitiveStringMap, full: StructType)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(full.fields.filter(f => keep.contains(f.name)))
-  }
-  override def build(): Scan = new ZarrScan(options, required)
-}
-
-/** One partition = a chunk-aligned row slice of the store. */
-final case class ZarrPartition(path: String, group: String,
-    rowStart: Long, nRows: Int) extends InputPartition
-
-final class ZarrScan(options: CaseInsensitiveStringMap, required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val s = ZarrTable.store(options)
+  override def slices(rowsPer: Int): Seq[ArraySlice] = {
+    val s = store
     require(s.arrays.nonEmpty, s"empty zarr store ${s.path}")
     val rowCounts = s.arrays.map(_.rows).distinct
     require(rowCounts.size == 1,
@@ -126,131 +59,12 @@ final class ZarrScan(options: CaseInsensitiveStringMap, required: StructType)
       s"zarr arrays disagree on axis-0 chunking: $chunkRows")
     val rows = rowCounts.head
     // partitions align to stored chunk boundaries; huge chunks split
-    val per = math.min(chunkRows.head,
-      options.getOrDefault("rowsPerPartition", (1 << 21).toString).toLong).toInt max 1
-    // the container selection must survive to the executor-side
-    // re-open — the reader only gets the partition, not the options
-    val grp = Option(options.get("group")).getOrElse("")
-    (0L until rows by per)
-      .map(st => ZarrPartition(s.path, grp, st, math.min(per, rows - st).toInt))
-      .toArray[InputPartition]
+    val per = math.min(chunkRows.head, rowsPer.toLong).toInt max 1
+    (0L until rows by per).map(st => ArraySlice(s.path, st, math.min(per, rows - st).toInt, st))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(required)
-}
-
-final class ZarrReaderFactory(required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ZarrPartitionReader(partition.asInstanceOf[ZarrPartition],
-      required.fields.map(_.name))
-
-  // Vectorized path — same rationale as Hdf5ReaderFactory: the
-  // decompressed chunk is already columnar, so ColumnarBatch skips
-  // per-row materialization entirely.
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ZarrColumnarReader(partition.asInstanceOf[ZarrPartition], required)
-}
-
-/** Columnar partition reader over the decompressed chunk slice via
-  * the shared ColumnarFill kernels. */
-final class ZarrColumnarReader(p: ZarrPartition, schema: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val store = ZarrTable.reopen(p)
-  private val byName = ZarrTable.columnsFor(store).map(c => c.name -> c).toMap
-  private val metaByArr = store.arrays.map(a => a.name -> a).toMap
-
-  private val buffers: Map[String, java.nio.ByteBuffer] =
-    schema.fieldNames.filter(_ != "row_id").map(byName(_)).map(_.array).distinct
-      .map(arr => arr -> ZarrStore.readRows(metaByArr(arr), p.rowStart, p.nRows))
-      .toMap
-
-  private val batchSize = math.max(math.min(p.nRows, 1 << 16), 1)
-  private val vectors = schema.fields.map(f => new OnHeapColumnVector(batchSize, f.dataType))
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-
-  private val fillers: Array[(Int, Int) => Unit] =
-    schema.fieldNames.zip(vectors).map {
-      case ("row_id", vec) => graft.sources.ColumnarFill.idFiller(vec, p.rowStart)
-      case (name, vec) =>
-        val c = byName(name)
-        val m = metaByArr(c.array)
-        graft.sources.ColumnarFill.filler(vec, buffers(c.array), m.kind,
-          m.elemSize, m.rowWidth, c.comp, c.array)
-    }
-
-  private var offset = 0
-  override def next(): Boolean =
-    if (offset >= p.nRows) false
-    else {
-      val n = math.min(batchSize, p.nRows - offset)
-      vectors.foreach(_.reset())
-      fillers.foreach(_(offset, n))
-      batch.setNumRows(n)
-      offset += n
-      true
-    }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = batch.close()
-}
-
-/** Column-major IO (one buffer per projected array slice), row-major
-  * emission; per-column extraction bound once up front. */
-final class ZarrPartitionReader(p: ZarrPartition, colNames: Array[String])
-    extends PartitionReader[InternalRow] {
-
-  private val store = ZarrTable.reopen(p)
-  private val byName = ZarrTable.columnsFor(store).map(c => c.name -> c).toMap
-  private val metaByArr = store.arrays.map(a => a.name -> a).toMap
-
-  private val buffers: Map[String, java.nio.ByteBuffer] =
-    colNames.filter(_ != "row_id").map(byName(_)).map(_.array).distinct.map { arr =>
-      arr -> ZarrStore.readRows(metaByArr(arr), p.rowStart, p.nRows)
-    }.toMap
-
-  private val getters: Array[Int => Any] = colNames.map {
-    case "row_id" => (i: Int) => p.rowStart + i
-    case name =>
-      val c = byName(name)
-      val m = metaByArr(c.array)
-      val buf = buffers(c.array)
-      val w = m.rowWidth; val comp = c.comp
-      (m.kind, m.elemSize) match {
-        case ('f', 4) => (i: Int) => buf.getFloat((i * w + comp) * 4)
-        case ('f', 8) => (i: Int) => buf.getDouble((i * w + comp) * 8)
-        case ('i', 1) => (i: Int) => buf.get(i * w + comp)
-        case ('i', 2) => (i: Int) => buf.getShort((i * w + comp) * 2)
-        case ('i', 4) => (i: Int) => buf.getInt((i * w + comp) * 4)
-        case ('i', 8) => (i: Int) => buf.getLong((i * w + comp) * 8)
-        case ('u', 1) => (i: Int) => (buf.get(i * w + comp) & 0xff).toShort
-        case ('u', 2) => (i: Int) => buf.getShort((i * w + comp) * 2) & 0xffff
-        case ('u', 4) => (i: Int) => buf.getInt((i * w + comp) * 4) & 0xffffffffL
-        case ('u', 8) => (i: Int) => {
-          val v = buf.getLong((i * w + comp) * 8)
-          if (v < 0) sys.error(s"u8 value >= 2^63 in ${c.array} does not fit LongType")
-          v
-        }
-        case t => sys.error(s"unreachable dtype $t")
-      }
+  override def read(s: ArraySlice, buffers: Seq[String]): Map[String, ByteBuffer] = {
+    val meta = store.arrays.map(a => a.name -> a).toMap
+    buffers.map(b => b -> ZarrStore.readRows(meta(b), s.rowStart, s.nRows)).toMap
   }
-
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < p.nRows }
-
-  override def get(): InternalRow = {
-    val out = new Array[Any](getters.length)
-    var j = 0
-    while (j < getters.length) { out(j) = getters(j)(i); j += 1 }
-    new GenericInternalRow(out)
-  }
-
-  override def close(): Unit = ()
 }

@@ -105,20 +105,22 @@ class DedupClustersSpec extends SparkSpec {
   }
 
   test("large-star/small-star matches union-find on chain, star, and random graphs") {
+    // driverEdgeLimit = 0 forces the distributed star-rewriting path.
     // chain of 200 (diameter 199): propagation would need ~200 rounds,
     // star rewriting must land the SAME labels within its default 25
+    def star(ids: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame) =
+      Dedup.connectedComponents(ids, pairs, driverEdgeLimit = 0L)
+        .as[(Long, Long)].collect().toMap
     val chainIds = (1L to 200L).toDF("doc_id")
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
     val want = Dedup.connectedComponents(chainIds, chain)
       .as[(Long, Long)].collect().toMap
-    val got = Dedup.connectedComponentsStar(chainIds, chain)
-      .as[(Long, Long)].collect().toMap
+    val got = star(chainIds, chain)
     assert(got == want && got.values.toSet == Set(1L))
     // star graph rooted at a high id (asymmetry check)
     val starIds = (1L to 12L).toDF("doc_id")
-    val star = (1L to 11L).map(i => (12L, i)).toDF("a", "b")
-    assert(Dedup.connectedComponentsStar(starIds, star)
-      .as[(Long, Long)].collect().toMap.values.toSet == Set(1L))
+    val starPairs = (1L to 11L).map(i => (12L, i)).toDF("a", "b")
+    assert(star(starIds, starPairs).values.toSet == Set(1L))
     // deterministic pseudo-random pairs over 300 ids: several
     // components of irregular shape; exact match vs union-find
     val rIds = (0L until 300L).toDF("doc_id")
@@ -128,13 +130,10 @@ class DedupClustersSpec extends SparkSpec {
     }.filter(p => p._1 != p._2).toDF("a", "b")
     val wantR = Dedup.connectedComponents(rIds, rnd)
       .as[(Long, Long)].collect().toMap
-    val gotR = Dedup.connectedComponentsStar(rIds, rnd)
-      .as[(Long, Long)].collect().toMap
-    assert(gotR == wantR)
+    assert(star(rIds, rnd) == wantR)
     // empty pair set: all singletons
-    assert(Dedup.connectedComponentsStar(
-      (1L to 3L).toDF("doc_id"), Seq.empty[(Long, Long)].toDF("a", "b"))
-      .as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(star((1L to 3L).toDF("doc_id"), Seq.empty[(Long, Long)].toDF("a", "b"))
+      == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
   test("distributed propagation path matches the union-find fast path") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sources.Load
 import graft.sources.fits.{FitsReader, FitsWriter}
 
@@ -63,6 +64,63 @@ class FitsSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 3)
     assert(df.orderBy("row_id").select("id").as[Long].collect().toSeq ==
       Seq(10L, 11L, 12L, 13L, 14L))
+  }
+
+  test("graft-fits serves the vectorized path (ColumnarToRow in plan)") {
+    val df = spark.read.format("graft-fits").load(file)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("ColumnarToRow"), p.take(600))
+    assert(df.agg(sum("n")).as[Long].head() == 15L)
+  }
+
+  /** A BINTABLE with every column type, built card by card (FitsWriter
+    * writes only D/E/J/K/A): 5 rows of L, B, I, J, K, E, D, 4A. */
+  private lazy val allTypes: String = {
+    val p = Files.createTempDirectory("graft_fits_types").toString + "/t.fits"
+    def header(cards: Seq[(String, String)]): Array[Byte] = {
+      val s = (cards.map { case (k, v) => f"$k%-8s= $v%-70s" } :+ f"${"END"}%-80s").mkString
+      (s + " " * ((FitsReader.BlockSize - s.length % FitsReader.BlockSize) %
+        FitsReader.BlockSize)).getBytes("US-ASCII")
+    }
+    val forms = Seq("l" -> "1L", "b" -> "1B", "i" -> "1I", "j" -> "1J", "k" -> "1K",
+      "e" -> "1E", "d" -> "1D", "s" -> "4A")
+    val rowBytes = 1 + 1 + 2 + 4 + 8 + 4 + 8 + 4
+    val strs = Seq("x   ", "yy\u0000\u0000", "zzzz", "    ", "w w ")
+    val data = java.nio.ByteBuffer.allocate(FitsReader.BlockSize) // big-endian
+    (0 until 5).foreach { r =>
+      data.put((if (r % 2 == 0) 'T' else 'F').toByte).put((250 + r).toByte)
+        .putShort((-100 * r).toShort).putInt(1000 * r).putLong(Long.MaxValue - r)
+        .putFloat(r + 0.25f).putDouble(-1.5 * r).put(strs(r).getBytes("US-ASCII"))
+    }
+    val out = new java.io.FileOutputStream(p)
+    try {
+      out.write(header(Seq("SIMPLE" -> "T", "BITPIX" -> "8", "NAXIS" -> "0", "EXTEND" -> "T")))
+      out.write(header(Seq("XTENSION" -> "'BINTABLE'", "BITPIX" -> "8", "NAXIS" -> "2",
+        "NAXIS1" -> rowBytes.toString, "NAXIS2" -> "5", "PCOUNT" -> "0", "GCOUNT" -> "1",
+        "TFIELDS" -> forms.size.toString) ++ forms.zipWithIndex.flatMap { case ((n, f), i) =>
+          Seq(s"TTYPE${i + 1}" -> s"'$n'", s"TFORM${i + 1}" -> s"'$f'") }))
+      out.write(data.array())
+    } finally out.close()
+    p
+  }
+
+  test("every FITS type reads back across partitions ending in a partial slice") {
+    val df = spark.read.format("graft-fits").option("rowsPerPartition", "2").load(allTypes)
+    assert(df.rdd.getNumPartitions == 3) // 2 + 2 + 1
+    assert(df.schema.fields.map(_.dataType).toSeq == Seq(LongType, BooleanType, ShortType,
+      ShortType, IntegerType, LongType, FloatType, DoubleType, StringType))
+    val rows = df.orderBy("row_id").collect()
+    assert(rows.map(_.getLong(0)).toSeq == (0L until 5L))
+    assert(rows.map(_.getBoolean(1)).toSeq == Seq(true, false, true, false, true))
+    // B is an unsigned byte: 250..254 widen to Short, not wrap negative
+    assert(rows.map(_.getShort(2).toInt).toSeq == (250 until 255))
+    assert(rows.map(_.getShort(3).toInt).toSeq == Seq(0, -100, -200, -300, -400))
+    assert(rows.map(_.getInt(4)).toSeq == Seq(0, 1000, 2000, 3000, 4000))
+    assert(rows.map(_.getLong(5)).toSeq == (0 until 5).map(Long.MaxValue - _))
+    assert(rows.map(_.getFloat(6)).toSeq == (0 until 5).map(_ + 0.25f))
+    assert(rows.map(_.getDouble(7)).toSeq == (0 until 5).map(-1.5 * _))
+    // trailing spaces and NULs trimmed, inner spaces kept
+    assert(rows.map(_.getString(8)).toSeq == Seq("x", "yy", "zzzz", "", "w w"))
   }
 
   test("files without a BINTABLE extension fail with a clear error") {

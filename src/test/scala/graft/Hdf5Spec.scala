@@ -103,6 +103,26 @@ class Hdf5Spec extends SparkSpec {
     assert(df.agg(sum("ParticleIDs")).head.getLong(0) == (0 until 12).sum)
   }
 
+  test("a row_id predicate that prunes every partition returns no rows") {
+    val df = ChunkedHdf5.load(spark, snapDir, "PartType0").filter(col("row_id") >= 100L)
+    assert(df.rdd.getNumPartitions == 0)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), plan.take(600))
+    assert(df.collect().isEmpty)
+  }
+
+  test("unsigned ints widen; a u8 value >= 2^63 fails the scan loudly") {
+    val dir = Files.createTempDirectory("graft_h5_u8").toString
+    Hdf5Writer.write(s"$dir/big.0.hdf5", Hdf5Writer.Group(children = Seq(
+      "PartType0" -> Hdf5Writer.Group(children = Seq(
+        "Counts" -> Hdf5Writer.U32(Array(1, -1)), // -1 = 2^32 - 1
+        "ParticleIDs" -> Hdf5Writer.U64(Array(1L, -1L))))))) // -1L = 2^64 - 1
+    val df = ChunkedHdf5.load(spark, dir, "PartType0")
+    assert(df.select("Counts").collect().map(_.getLong(0)).toSeq == Seq(1L, 4294967295L))
+    val e = intercept[Exception](df.collect())
+    assert(e.getMessage.contains("u8 value >= 2^63 in /PartType0/ParticleIDs"), e.getMessage)
+  }
+
   test("row slicing partitions a chunk without changing results") {
     val df = spark.read.format("graft-hdf5")
       .option("group", "PartType0").option("rowsPerPartition", "2")

@@ -194,6 +194,23 @@ class ZarrSpec extends SparkSpec {
     assert(df.agg(sum("v")).as[Double].head() == (0 until 10).map(_ + 0.5).sum)
   }
 
+  test("graft-zarr prunes chunks on row_id and reports the pushed filter") {
+    val dir = tmp()
+    ZarrWriter.write(dir, Seq("v" -> ZarrWriter.I64(Array.tabulate(6)(_.toLong))),
+      chunkRows = 2)
+    val df = spark.read.format("graft-zarr").load(dir)
+    val tail = df.filter(col("row_id") >= 4L)
+    val p = tail.queryExecution.executedPlan.toString
+    assert(p.contains("PushedFilters: [GreaterThanOrEqual(row_id,4)]"), p.take(600))
+    assert(tail.rdd.getNumPartitions == 1)
+    assert(tail.select("v").as[Long].collect().sorted.toSeq == Seq(4L, 5L))
+    // a predicate no chunk can satisfy plans no partition and reads nothing
+    val none = df.filter(col("row_id") >= 100L)
+    assert(none.rdd.getNumPartitions == 0)
+    assert(none.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(none.collect().isEmpty)
+  }
+
   test("MiniJson parses the metadata grammar") {
     val v = MiniJson.parse(
       """{"a": [1, 2.5, -3e2], "b": {"c": null, "d": true}, "s": "x\"y\n"}""")
